@@ -13,7 +13,7 @@ backtick quoting (the mapping is mechanical: ``.`` -> ``_``).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 def colname(attr_key: str) -> str:
@@ -25,7 +25,6 @@ def colname(attr_key: str) -> str:
 class PipelineConfig:
     # --- record identity / ordering (BASELINE.json input_hint) ---
     conv_id_col: str = "conv_id"
-    turn_idx_col: str = "turn_idx"
 
     # --- shared stack-trace attributes (sourcemapprocessor/factory.go:34-40) ---
     stack_trace_col: str = "exception_stacktrace"
@@ -99,35 +98,8 @@ class PipelineConfig:
     # orientation (the engine default); True = byte-match the reference.
     sourcemap_reference_compat: bool = False
 
-    # Parse engine: "sql" (default) parses the js/jvm/apple routes with
-    # JVM-side regexp expressions — Python workers only see MetricKit and
-    # Opera-marker rows; "udf" forces every parsed route through the Arrow
-    # UDF (the semantics oracle, used by the parity tests).
-    parse_engine: str = "sql"
-
-    # How the Arrow-UDF-parsed rows (MetricKit + Opera, ~2%) enter the plan:
-    # - "inline" (default): the UDF column sits in the main projection.  One
-    #   scan, but Spark's EvalPython nodes report UnknownPartitioning, so a
-    #   conv_id-bucketed input table cannot carry its partitioning through
-    #   to the regroup — the full table re-shuffles.
-    # - "join": the UDF rows are computed on a side branch (second scan,
-    #   filtered to the ~2%) and shuffle-hash-joined back on (conv_id,
-    #   turn_idx).  The hot path stays JVM-only, so a bucketed input's
-    #   partitioning survives to the regroup: NO full-table exchange — only
-    #   the ~2% UDF branch shuffles.  At cluster scale this trades a
-    #   column-pruned re-scan for a full-table network shuffle (measured
-    #   in-sandbox at 4.8M turns: ~8% — BASELINE.md).  Requires (conv_id,
-    #   turn_idx) to be unique, which the transcript model guarantees.
-    udf_parse_strategy: str = "inline"
-
-    # --- scale knobs ---
-    shuffle_partitions: int = 32
-    skew_salt_buckets: int = 16  # salt modulus for hot conv_id mitigation
-
     route_col: str = "route"  # js | jvm | apple | metrickit | skip
     sink_col: str = "sink"  # fan-out key: route + outcome
-
-    extra: dict = field(default_factory=dict)
 
 
 DEFAULT_CONFIG = PipelineConfig()

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import re
 
+from symspark.functions.limits import line_ok
+
 # groups: 1 stack index, 2 library name, 3 hex address, 4 uuid-or-binary,
 # 5 offset (logs_processor.go:210).  re.ASCII matches Go RE2's ASCII \w.
 _RE_STACK_LINE = re.compile(
@@ -26,13 +28,13 @@ def is_uuid(s: str) -> bool:
 
 def parse_apple_line(line: str) -> dict | None:
     """Parse one crash line; None when the line does not match (passthrough,
-    logs_processor.go:214-217).
+    logs_processor.go:214-217) or fails ``line_ok``.
 
     Returns ``{prefix, lib, tok, addr}`` where ``prefix`` is the original
     line up to the end of the hex-address group and ``tok`` is the
     uuid-or-binary discriminator token.
     """
-    m = _RE_STACK_LINE.search(line)
+    m = _RE_STACK_LINE.search(line) if line_ok(line) else None
     if not m:
         return None
     return {
@@ -42,11 +44,3 @@ def parse_apple_line(line: str) -> dict | None:
         "addr": int(m.group(5)),
     }
 
-
-# Vectorized front-end: same regex with the prefix (line start through the
-# end of the hex-address group) captured as an outer group, so the batch
-# path gets `line[:m.end(3)]` without per-row match objects.
-_RE_STACK_LINE_VEC = re.compile(
-    r"^(([0-9]+)\s+([\w _\-\.]+[\w_\-\.])\s+(0x[\da-f]+))\s+([\w _\-\.]*) \+ (\d+)",
-    re.ASCII,
-)

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import re
 
+from symspark.functions.limits import line_ok
+
 ERR_EMPTY = "stack trace is empty"
 ERR_INVALID = "invalid stack trace format"
 ERR_NO_FRAMES = "no valid stack frames found in stack trace"
@@ -23,8 +25,8 @@ _RE_FRAME = re.compile(r"^\s*at\s+([^\s(]+)\.([^\s.(]+)\(([^:)]+)(?::(-?\d+))?\)
 
 def parse_java_frame(line: str) -> dict | None:
     """Parse one stack line; None if it is not a frame
-    (stack_trace_parser.go:125-155)."""
-    m = _RE_FRAME.search(line)
+    (stack_trace_parser.go:125-155); a line failing ``line_ok`` is not one."""
+    m = _RE_FRAME.search(line) if line_ok(line) else None
     if not m:
         return None
     cls, method, source, line_no = m.groups()
@@ -66,15 +68,3 @@ def parse_java_stack_trace(text: str) -> tuple[dict | None, str | None]:
         "elements": elements,
     }, None
 
-
-def java_line_number(source, line_no) -> int:
-    """Android StackTraceElement line-number conventions (shared by the
-    scalar and batch paths)."""
-    if source == "Native Method":
-        return -2
-    if line_no:
-        try:
-            return int(line_no)
-        except ValueError:
-            return -1
-    return -1

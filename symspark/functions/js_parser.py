@@ -8,9 +8,9 @@ Opera 11+ stacktrace format, then the standard ``stack`` property
 (React-Native -> Chrome/V8 -> WinJS -> Gecko per line), then Opera 10,
 then the Opera 9 message format.
 
-Pure-Python core so it can be unit-tested against the reference's parser
-corpus and driven from a vectorized pandas UDF (Arrow-batched; the per-line
-regex cascade itself is inherently scalar).
+Pure Python, unit-tested against the reference's parser corpus; it is the
+test oracle of the JVM engine (functions/parse_sql.py), so it applies the
+same ``LINE_CAP`` gate (functions/limits.py) to every line.
 
 Returned frames are dicts ``{url, func, line, col}`` with ``line``/``col``
 ``None`` when absent (nullable ints, stack_trace_parser.go:69-70).
@@ -19,6 +19,8 @@ Returned frames are dicts ``{url, func, line, col}`` with ``line``/``col``
 from __future__ import annotations
 
 import re
+
+from symspark.functions.limits import line_ok
 
 UNKNOWN_FUNCTION = "?"
 
@@ -84,6 +86,8 @@ def _from_stack_prop(stack: str) -> list[dict] | None:
         return None
     frames: list[dict] = []
     for line in stack.split("\n"):
+        if not line_ok(line):
+            continue
         m = _RE_REACT_NATIVE.search(line)
         if m:
             frames.append(_frame(m.group(2), m.group(1), _to_int(m.group(3)), _to_int(m.group(4))))
@@ -122,12 +126,14 @@ def _from_opera11(stacktrace: str) -> list[dict] | None:
         return None
     lines = stacktrace.split("\n")
     frames: list[dict] = []
-    for i in range(0, len(lines), 2):
-        m = _RE_OPERA11.search(lines[i])
+    for line in lines[::2]:
+        if not line_ok(line):
+            continue
+        m = _RE_OPERA11.search(line)
         if m:
             frames.append(_frame(m.group(2), m.group(3) or "", _to_int(m.group(1)), None))
             continue
-        m = _RE_OPERA11_COL.search(lines[i])
+        m = _RE_OPERA11_COL.search(line)
         if m:
             func = m.group(3) or m.group(4) or ""
             frames.append(_frame(m.group(6), func, _to_int(m.group(1)), _to_int(m.group(2))))
@@ -135,6 +141,8 @@ def _from_opera11(stacktrace: str) -> list[dict] | None:
 
 
 def _opera9_line(line: str) -> dict | None:
+    if not line_ok(line):
+        return None
     m = _RE_OPERA9_LINKED.search(line)
     if m:
         return _frame(m.group(2), m.group(3) or "", _to_int(m.group(1)), None)
@@ -194,127 +202,3 @@ def compute_stack_trace(name: str, message: str, stack: str) -> tuple[dict | Non
             "frames": frames,
         }, None
     return None, "failed to parse stack trace"
-
-
-# ---------------------------------------------------------------------------
-# Vectorized batch front-end (Arrow/pandas hot path)
-# ---------------------------------------------------------------------------
-#
-# The overwhelming majority of real stacks are the standard ``stack``
-# property (React-Native / Chrome / WinJS / Gecko) - those parse fully
-# vectorized with pandas ``str.extract`` (regexes run in C over the whole
-# batch).  Every Opera strategy (11+/10/9) requires a literal
-# ``line <digits>`` token (``" line 5"`` / ``"Line 5 of ..."``), so rows
-# whose stack AND message lack that marker can never take an Opera branch;
-# only marker rows (rare) fall back to the scalar cascade.
-
-import numpy as np  # noqa: E402
-import pandas as pd  # noqa: E402
-
-_OPERA_MARKER = re.compile(r"(?im)(?:^|\s)line\s+\d")
-
-
-def _extract_stack_prop_frames(lines: pd.Series) -> pd.DataFrame:
-    """Vectorized RN -> Chrome -> WinJS -> Gecko cascade over a Series of
-    single lines (index = originating record id, duplicated per line).
-    Returns a DataFrame (rid, url, func, line, col) of matched lines only,
-    in original order."""
-    rn = lines.str.extract(_RE_REACT_NATIVE)
-    ch = lines.str.extract(_RE_CHROME)
-    wj = lines.str.extract(_RE_WINJS)
-    gk = lines.str.extract(_RE_GECKO)
-
-    # str.extract columns are 0-based: regex group k -> column k-1
-    m_rn = rn[1].notna()
-    m_ch = ~m_rn & ch[1].notna()
-    m_wj = ~m_rn & ~m_ch & wj[1].notna()
-    m_gk = ~m_rn & ~m_ch & ~m_wj & gk[2].notna()
-
-    # Chrome eval rewrite: url/line/col from the inner (url:line:col) when
-    # the matched url starts with "eval"; the "(native)" check reads the
-    # ORIGINAL group 2 (stack_trace_parser.go:120-139 order)
-    ch_url, ch_line, ch_col = ch[1].copy(), ch[2].copy(), ch[3].copy()
-    ev = m_ch & ch[1].str.startswith("eval").fillna(False)
-    if ev.any():
-        em = ch.loc[ev, 1].str.extract(_RE_CHROME_EVAL)
-        hit = em[0].notna()
-        hit_idx = em.index[hit.to_numpy()]
-        ch_url.loc[hit_idx] = em.loc[hit_idx, 0]
-        ch_line.loc[hit_idx] = em.loc[hit_idx, 1]
-        ch_col.loc[hit_idx] = em.loc[hit_idx, 2]
-    native = m_ch & ch[1].str.startswith("native").fillna(False)
-    ch_url = ch_url.mask(native, "(native)")
-
-    # Gecko eval rewrite: col dropped (stack_trace_parser.go:166-177)
-    gk_url, gk_line, gk_col = gk[2].copy(), gk[3].copy(), gk[4].copy()
-    gev = m_gk & gk[2].str.contains(" > eval", regex=False).fillna(False)
-    if gev.any():
-        em = gk.loc[gev, 2].str.extract(_RE_GECKO_EVAL)
-        hit = em[0].notna()
-        hit_idx = em.index[hit.to_numpy()]
-        gk_url.loc[hit_idx] = em.loc[hit_idx, 0]
-        gk_line.loc[hit_idx] = em.loc[hit_idx, 1]
-        gk_col.loc[hit_idx] = None
-
-    conds = [m_rn.to_numpy(), m_ch.to_numpy(), m_wj.to_numpy(), m_gk.to_numpy()]
-    url = np.select(conds, [rn[1], ch_url, wj[1], gk_url], default=None)
-    func = np.select(conds, [rn[0], ch[0], wj[0], gk[0]], default=None)
-    line = np.select(conds, [rn[2], ch_line, wj[2], gk_line], default=None)
-    col = np.select(conds, [rn[3], ch_col, wj[3], gk_col], default=None)
-
-    matched = m_rn | m_ch | m_wj | m_gk
-    out = pd.DataFrame(
-        {
-            "rid": lines.index.to_numpy(),
-            "url": url,
-            "func": func,
-            "line": pd.to_numeric(pd.Series(line), errors="coerce").astype("Int64").to_numpy(object),
-            "col": pd.to_numeric(pd.Series(col), errors="coerce").astype("Int64").to_numpy(object),
-        }
-    )
-    return out[matched.to_numpy()]
-
-
-def compute_stack_trace_batch(
-    name: pd.Series, message: pd.Series, stack: pd.Series
-) -> "pd.Series":
-    """Batch equivalent of :func:`compute_stack_trace`: returns an
-    object Series of ``(result, error)`` tuples aligned to the input."""
-    name = name.fillna("")
-    message = message.fillna("")
-    stack = stack.fillna("")
-    out = pd.Series([None] * len(stack), index=stack.index, dtype=object)
-
-    marker = stack.str.contains(_OPERA_MARKER) | message.str.contains(_OPERA_MARKER)
-    for i in stack.index[marker]:
-        out.at[i] = compute_stack_trace(name.at[i], message.at[i], stack.at[i])
-
-    fast = stack.index[~marker]
-    if len(fast):
-        lines = stack.loc[fast].str.split("\n").explode()
-        fr = _extract_stack_prop_frames(lines)
-        by_rid: dict = {}
-        for rid, url, func, line, col in fr.itertuples(index=False, name=None):
-            by_rid.setdefault(rid, []).append(
-                _frame(
-                    url,
-                    func if (func is not None and func == func) else "",
-                    None if line is pd.NA else line,
-                    None if col is pd.NA else col,
-                )
-            )
-        for i in fast:
-            frames = by_rid.get(i)
-            if frames:
-                out.at[i] = (
-                    {
-                        "name": name.at[i],
-                        "message": message.at[i],
-                        "mode": "stack",
-                        "frames": frames,
-                    },
-                    None,
-                )
-            else:
-                out.at[i] = (None, "failed to parse stack trace")
-    return out

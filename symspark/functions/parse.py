@@ -1,36 +1,22 @@
-"""The unified vectorized parse stage.
+"""Scalar parse front end: the test oracle of the JVM parse engine.
 
-One Arrow-batched pandas UDF runs the route-appropriate parser per row and
-emits the unified frame IR (schemas.PARSED_SCHEMA), so the pipeline scans
-the input once and explodes frames once.  Mirrors the reference's parse
-dispatch: sourcemapprocessor/processor.go:183-206 (JS),
+Runs the route's scalar parser (js_parser / java_parser / apple_parser /
+metrickit) on one record and shapes the result as a ``PARSED_SCHEMA`` row,
+the frame IR the pipeline explodes.  The runtime parse is
+functions/parse_sql.py; tests/test_parse_sql.py pins it byte-equal to
+these functions.  Mirrors the reference's parse dispatch:
+sourcemapprocessor/processor.go:183-206 (JS),
 proguardprocessor/log_processor.go:139-161 (Java),
 dsymprocessor/logs_processor.go:179-195 (Apple lines),
 dsymprocessor/logs_processor.go:350-393 (MetricKit JSON).
-
-Structured-array routes (``js_structured`` / ``jvm_structured``) never hit
-Python: their frames are built with JVM expressions in
-operators/frames.py.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import functions as F
-
-from symspark.functions.apple_parser import _RE_STACK_LINE_VEC as _RE_APPLE_VEC, parse_apple_line
-from symspark.functions.java_parser import (
-    ERR_EMPTY,
-    ERR_INVALID,
-    ERR_NO_FRAMES,
-    _RE_FRAME as _JAVA_FRAME,
-    _RE_HEADER as _JAVA_HEADER,
-    java_line_number,
-    parse_java_stack_trace,
-)
-from symspark.functions.js_parser import compute_stack_trace, compute_stack_trace_batch
+from symspark.functions.apple_parser import parse_apple_line
+from symspark.functions.java_parser import parse_java_stack_trace
+from symspark.functions.js_parser import compute_stack_trace
 from symspark.functions.metrickit import flatten_metrickit
-from symspark.schemas import PARSED_SCHEMA
 
 # The stacktrace attribute key named in parse-error messages
 # (sourcemapprocessor/processor.go:186-196).
@@ -138,137 +124,15 @@ def _parse_mk(text: str) -> dict:
     return {"frames": out}
 
 
-def _parse_apple_batch(text: pd.Series) -> dict:
-    """Vectorized Apple crash-line parse: one str.extract over every line
-    of the batch; returns {row_index: parse-result-dict}."""
-    lines = text.fillna("").str.split("\n").explode()
-    ex = lines.str.extract(_RE_APPLE_VEC)
-    # cols: 0=prefix 1=idx 2=lib 3=hex 4=tok 5=offset
-    results: dict = {i: {"frames": []} for i in text.index}
-    pos = lines.groupby(level=0).cumcount().to_numpy()
-    for rid, raw, pfx, lib, tok, off, p in zip(
-        lines.index.to_numpy(),
-        lines.to_numpy(),
-        ex[0].to_numpy(),
-        ex[2].to_numpy(),
-        ex[4].to_numpy(),
-        ex[5].to_numpy(),
-        pos,
-    ):
-        frames = results[rid]["frames"]
-        if pfx != pfx:  # NaN -> unmatched line: passthrough
-            frames.append({"pos": int(p), "kind": "apple_raw", "raw": raw})
-        else:
-            frames.append(
-                {
-                    "pos": int(p),
-                    "kind": "apple",
-                    "raw": raw,
-                    "prefix": pfx,
-                    "lib": lib,
-                    "tok": tok,
-                    "addr": int(off),
-                }
-            )
-    return results
-
-
-def _parse_jvm_batch(text: pd.Series) -> dict:
-    """Vectorized Java parse: header regex on line 0, frame regex over all
-    following lines; returns {row_index: parse-result-dict}."""
-    txt = text.fillna("")
-    split = txt.str.split("\n")
-    hdr = split.str[0].str.strip().str.extract(_JAVA_HEADER)
-    results: dict = {}
-    empty_txt = txt == ""
-    no_hdr = hdr[0].isna()
-    for i in text.index:
-        if empty_txt.at[i]:
-            results[i] = {"error": PARSE_WRAP + ERR_EMPTY}
-        elif no_hdr.at[i]:
-            results[i] = {"error": PARSE_WRAP + ERR_INVALID}
-        else:
-            results[i] = {
-                "name": hdr.at[i, 0],
-                "message": hdr.at[i, 1],
-                "frames": [],
-            }
-    ok = ~(empty_txt | no_hdr)
-    if not ok.any():
-        return results
-    lines = split.loc[ok].explode()
-    first_line = lines.groupby(level=0).cumcount().to_numpy() == 0
-    fr = lines.str.extract(_JAVA_FRAME)
-    blank = lines.str.strip().to_numpy() == ""
-    for rid, raw, cls, method, src, line_no, skip, is_first in zip(
-        lines.index.to_numpy(),
-        lines.to_numpy(),
-        fr[0].to_numpy(),
-        fr[1].to_numpy(),
-        fr[2].to_numpy(),
-        fr[3].to_numpy(),
-        blank,
-        first_line,
-    ):
-        if is_first or skip:
-            continue
-        frames = results[rid]["frames"]
-        if cls != cls:  # NaN -> not a frame: raw element
-            frames.append({"pos": len(frames), "kind": "jvm_raw", "raw": raw})
-        else:
-            frames.append(
-                {
-                    "pos": len(frames),
-                    "kind": "jvm",
-                    "cls": cls,
-                    "method": method,
-                    "line": java_line_number(src, None if line_no != line_no else line_no),
-                    "src": src,
-                }
-            )
-    for i in text.index:
-        r = results[i]
-        if "frames" in r and not r["frames"]:
-            results[i] = {"error": PARSE_WRAP + ERR_NO_FRAMES}
-    return results
-
-
-def _parse_js_batch(text, name, message) -> dict:
-    batch = compute_stack_trace_batch(name, message, text)
-    return {i: _js_result_to_row(*batch.at[i]) for i in text.index}
-
-
-_BATCH_DISPATCH = {
-    "js": lambda t, n, m: _parse_js_batch(t, n, m),
-    "jvm": lambda t, n, m: _parse_jvm_batch(t),
-    "apple": lambda t, n, m: _parse_apple_batch(t),
+_BY_ROUTE = {
+    "js": _parse_js,
+    "jvm": lambda text, name, message: _parse_jvm(text),
+    "apple": lambda text, name, message: _parse_apple(text),
+    "mk": lambda text, name, message: _parse_mk(text),
 }
 
-_DISPATCH = {"js": lambda t, n, m: _parse_js(t, n, m),
-             "jvm": lambda t, n, m: _parse_jvm(t),
-             "apple": lambda t, n, m: _parse_apple(t),
-             "mk": lambda t, n, m: _parse_mk(t)}
 
-_EMPTY = {"name": None, "message": None, "mode": None, "error": None, "frames": None}
-
-
-@F.pandas_udf(PARSED_SCHEMA)
-def parse_stack_udf(
-    text: pd.Series, route: pd.Series, name: pd.Series, message: pd.Series
-) -> pd.DataFrame:
-    """js / jvm / apple parse fully vectorized (pandas str.extract in C
-    over the whole Arrow batch; js Opera-marker rows fall back to the
-    scalar cascade inside compute_stack_trace_batch).  MetricKit stays
-    per-row: it is a recursive JSON flatten (~2% of rows)."""
-    out = [dict(_EMPTY)] * len(text)
-    positions = {i: p for p, i in enumerate(text.index)}
-    for r, fn in _BATCH_DISPATCH.items():
-        mask = (route == r).to_numpy()
-        if mask.any():
-            idx = text.index[mask]
-            for i, res in fn(text.loc[idx], name.loc[idx], message.loc[idx]).items():
-                out[positions[i]] = {**_EMPTY, **res}
-    for p, (t, r, n, m) in enumerate(zip(text, route, name, message)):
-        if r == "mk":
-            out[p] = {**_EMPTY, **_parse_mk(t)}
-    return pd.DataFrame(out, columns=list(_EMPTY))
+def parse_record(route: str, text: str | None, name: str | None, message: str | None) -> dict:
+    """One record through its route's scalar parser; ``text`` is the
+    MetricKit JSON for an mk record."""
+    return _BY_ROUTE[route](text, name, message)

@@ -1,39 +1,40 @@
-"""JVM-side parse fast path (no Python workers for the dominant formats).
+"""The parse engine: every raw-text route parsed by JVM expressions.
 
-Same semantics as the Arrow parse UDF (:mod:`symspark.functions.parse_arrow`,
-itself pinned byte-exact to the scalar TraceKit/Java/Apple oracles), but
-expressed entirely as Spark SQL expressions: ``split`` + ``transform`` +
-``regexp_extract`` cascades that run inside the JVM executor threads.
+js, jvm, apple and MetricKit records are parsed inside the JVM executor
+threads with Spark SQL expressions (``split`` + ``transform`` +
+``regexp_*`` cascades, and VARIANT reads for MetricKit JSON), so the
+executed plan holds no Python-eval node: no Python worker, no Arrow
+round trip, and a bucketed input keeps its partitioning through the
+parse.  The scalar parsers (functions/parse.py and the modules it calls)
+are the test oracle: tests/test_parse_sql.py pins this engine byte-equal
+to them, with the limits of functions/limits.py applied in both.
 
-Why this exists: an Arrow UDF still runs a Python worker per task.  At
-local[32] that is 32 JVM task threads + 32 Python workers sharing 32
-hardware threads — the oversubscription behind the round-2 scaling-
-efficiency gap (SCALING.json 0.549 vs the >=0.8 target).  With the js /
-jvm / apple routes parsed JVM-side, Python only sees MetricKit JSON and
-Opera-marker rows (~2% of parsed rows), so task threads scale with cores.
-
-Route coverage (mirrors the Arrow UDF's fast/slow split):
-- js:    RN / Chrome+eval+native / WinJS / Gecko cascade
-         (sourcemapprocessor/stack_trace_parser.go:20-46 regex family);
-         rows carrying an Opera ``line N`` marker still go to Python
-         (the scalar TraceKit cascade is the oracle for those)
+Route coverage:
+- js:    the TraceKit cascade of js_parser.compute_stack_trace
+         (sourcemapprocessor/stack_trace_parser.go:399-430).  Rows without
+         an Opera ``line N`` marker can only match the standard ``stack``
+         property (RN / Chrome+eval+native / WinJS / Gecko per line), so
+         only marker rows evaluate the Opera 11 / stack / Opera 10 /
+         Opera 9 message cascade, with its modes and message rewrite.
 - jvm:   header + frame/raw preserve with the -2/-1 Android sentinels
          (proguardprocessor/stack_trace_parser.go:100-152)
 - apple: per-line crash regex, non-matching lines preserved
          (dsymprocessor/logs_processor.go:210-217)
-- mk:    always Python (recursive JSON flatten)
+- mk:    ``try_parse_json`` + typed ``try_variant_get`` reads; the
+         first-sub-frame chain walk is an ``aggregate`` loop bounded by
+         ``MK_DEPTH_CAP`` (dsymprocessor/logs_processor.go:292-398)
 
 Expression-duplication discipline: the per-line cascades are interpreted
-(HOFs are CodegenFallback), so every python-side re-reference would
-re-scan the line array.  All expensive arrays are therefore built exactly
-once inside a single ``_pp`` struct column (a multi-referenced non-cheap
-alias survives CollapseProject), and the PARSED_SCHEMA struct is assembled
-from cheap attribute lookups in a second projection.
+(HOFs are CodegenFallback), so every re-reference would re-run them.  All
+expensive work is therefore built exactly once per row inside a single
+``_pp`` struct column (a multi-referenced non-cheap alias survives
+CollapseProject), and the PARSED_SCHEMA struct is assembled from cheap
+attribute lookups in a second projection.  Inside the MetricKit walk,
+``_let`` binds an intermediate value once for several uses.
 
-The regexes are the RE2 patterns of parse_arrow.py transliterated to
-java.util.regex (named groups dropped for positional indices; semantics
-are identical for these patterns — both engines are leftmost-first here,
-and tests/test_parse_sql.py pins SQL==UDF on the full corpus).
+The regexes are the scalar parsers' patterns in java.util.regex syntax
+with ``(?d)`` (only ``\\n`` ends a line, as in Python ``re``); both engines
+are leftmost-first backtracking matchers.
 """
 
 from __future__ import annotations
@@ -41,6 +42,15 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 from symspark.functions.js_parser import UNKNOWN_FUNCTION
+from symspark.functions.limits import (
+    ERR_MK_DEPTH,
+    ERR_MK_JSON,
+    ERR_MK_NOT_LIST,
+    ERR_MK_NOT_OBJECT,
+    LINE_CAP,
+    LINE_SENTINELS,
+    MK_DEPTH_CAP,
+)
 from symspark.functions.parse import PARSE_WRAP
 from symspark.schemas import FRAME_SCHEMA
 
@@ -48,48 +58,60 @@ from symspark.schemas import FRAME_SCHEMA
 
 RE_OPERA_MARKER = r"(?im)(?:^|\s)line\s+\d"
 # 1 func, 2 url, 3 line, 4 col
-RE_RN = r"(?i)^\s*at (.*?) ?\(address at (.+?)(?::(\d+))?(?::(\d+))?\)\s*$"
+RE_RN = r"(?di)^\s*at (.*?) ?\(address at (.+?)(?::(\d+))?(?::(\d+))?\)\s*$"
 RE_CHROME = (
-    r"(?i)^\s*at (.*?) ?\(((?:file|https?|blob|chrome-extension"
+    r"(?di)^\s*at (.*?) ?\(((?:file|https?|blob|chrome-extension"
     r"|native|eval|webpack|<anonymous>|/).*?)(?::(\d+))?(?::(\d+))?\)?\s*$"
 )
-# 1 url, 2 line, 3 col (no (?i), mirrors parse_arrow._RE_CHROME_EVAL)
-RE_CHROME_EVAL = r"\((\S*)(?::(\d+))(?::(\d+))\)"
+# 1 url, 2 line, 3 col (no (?i), as js_parser._RE_CHROME_EVAL)
+RE_CHROME_EVAL = r"(?d)\((\S*)(?::(\d+))(?::(\d+))\)"
 # 1 func, 2 url, 3 line, 4 col
 RE_WINJS = (
-    r"(?i)^\s*at (?:((?:\[object object\])?.+) )?\(?"
+    r"(?di)^\s*at (?:((?:\[object object\])?.+) )?\(?"
     r"((?:file|ms-appx|https?|webpack|blob):.*?):(\d+)(?::(\d+))?\)?\s*$"
 )
 # 1 func, 2 args, 3 url, 4 line, 5 col
 RE_GECKO = (
-    r"(?i)^\s*(.*?)(?:\((.*?)\))?(?:^|@)"
+    r"(?di)^\s*(.*?)(?:\((.*?)\))?(?:^|@)"
     r"((?:file|https?|blob|chrome|webpack|resource|\[native).*?|[^@]*bundle)"
     r"(?::(\d+))?(?::(\d+))?\s*$"
 )
+# 1 url, 2 line
+RE_GECKO_EVAL = r"(?di)(\S+) line (\d+)(?: > eval line \d+)* > eval"
+# 1 line, 2 url, 3 func
+RE_OPERA11 = r"(?di) line (\d+).*script (?:in )?(\S+)(?:: in function (\S+))?$"
+# 1 line, 2 col, 3 anonymous func, 4 func, 5 args, 6 url
+RE_OPERA11_COL = (
+    r"(?di) line (\d+), column (\d+)\s*(?:in (?:<anonymous function: ([^>]+)>"
+    r"|([^\)]+))\((.*)\))? in (.*):\s*$"
+)
+# 1 line, 2 url, 3 func
+RE_OPERA9_LINKED = (
+    r"(?di)^\s*Line (\d+) of linked script ((?:file|https?|blob)\S+)"
+    r"(?:: in function (\S+))?\s*$"
+)
+# 1 line, 2 script index, 3 url, 4 func
+RE_OPERA9_INLINE = (
+    r"(?di)^\s*Line (\d+) of inline#(\d+) script in ((?:file|https?|blob)\S+)"
+    r"(?:: in function (\S+))?\s*$"
+)
+RE_OPERA9_FUNC = r"(?di)^\s*Line (\d+) of function script\s*$"
 # 1 prefix, 2 idx, 3 lib, 4 hex, 5 tok, 6 off
 RE_APPLE = (
     r"^(([0-9]+)\s+([\w _\-\.]+[\w_\-\.])\s+(0x[\da-f]+))"
     r"\s+([\w _\-\.]*) \+ ([0-9]+)"
 )
-RE_JAVA_HEADER = r"^([^\s:]+)\s*:\s*(.*)$"
-RE_JAVA_FRAME = r"^\s*at\s+([^\s(]+)\.([^\s.(]+)\(([^:)]+)(?::(-?\d+))?\)\s*$"
-
-# Backtracking-engine guard: java.util.regex backtracks, and the stacked
-# lazy/optional groups in RE_GECKO / RE_CHROME can go superlinear on long
-# adversarial non-matching lines (an executor CPU hazard RE2 — the Arrow
-# engine and the Go reference — cannot hit).  No legitimate stack-frame
-# line approaches this length, so lines longer than LINE_CAP chars are
-# treated as non-matching (js: skipped; jvm/apple: raw-preserved) in BOTH
-# engines, keeping sql==udf parity on any input (tests/test_parse_sql.py).
-# The same gate rejects lines containing the _SEP sentinel control chars:
-# a captured group carrying them would mis-split the single-execution group
-# extraction, so "control chars never appear in stack-trace lines" is
-# ENFORCED rather than assumed — again identically in both engines.
-LINE_CAP = 8192
+RE_JAVA_HEADER = r"(?d)^([^\s:]+)\s*:\s*(.*)$"
+RE_JAVA_FRAME = r"(?d)^\s*at\s+([^\s(]+)\.([^\s.(]+)\(([^:)]+)(?::(-?\d+))?\)\s*$"
 
 
 def _line_ok(l: Column) -> Column:
-    return (F.length(l) <= LINE_CAP) & ~l.contains("\x01") & ~l.contains("\x02")
+    """limits.line_ok as an expression (LINE_CAP note there)."""
+    ok = F.length(l) <= LINE_CAP
+    for s in LINE_SENTINELS:
+        ok = ok & ~l.contains(s)
+    return ok
+
 
 ERR_PARSE = PARSE_WRAP + "failed to parse stack trace"
 ERR_EMPTY = PARSE_WRAP + "stack trace is empty"
@@ -100,7 +122,7 @@ _FRAME_FIELDS = [(f.name, f.dataType.simpleString()) for f in FRAME_SCHEMA.field
 _FRAMES_T = f"array<{FRAME_SCHEMA.simpleString()}>"
 
 
-def _frame(**given: Column) -> Column:
+def frame_struct(**given: Column) -> Column:
     """Full FRAME_SCHEMA struct with unspecified fields null."""
     return F.struct(
         *[given.get(n, F.lit(None)).cast(t).alias(n) for n, t in _FRAME_FIELDS]
@@ -121,12 +143,17 @@ def _trim_ws(c: Column) -> Column:
     return F.regexp_replace(c, r"^\s+|\s+$", "")
 
 
+def _let(value: Column, body) -> Column:
+    """``body(v)`` with ``value`` evaluated once however often body uses v."""
+    return F.transform(F.array(value), body)[0]
+
+
 # Group-separator for single-execution extraction: one regexp_replace of an
 # anchored, pre-rlike-gated pattern rewrites the line to its capture groups
 # joined by this sentinel; splitting yields every group with ONE regex run
-# (each regexp_extract call would re-run the matcher per group).  Control
-# chars never appear in stack-trace lines.
-_SEP = "\x01\x02"
+# (each regexp_extract call would re-run the matcher per group).  Lines
+# carrying the sentinel chars never reach it (_line_ok).
+_SEP = "".join(LINE_SENTINELS)
 
 
 def _groups(l: Column, pattern: str, n: int) -> Column:
@@ -148,67 +175,145 @@ def _groups_find(l: Column, pattern: str, n: int) -> Column:
     )
 
 
-# --- js ---------------------------------------------------------------------
+def _tag(strategy: int, groups: Column) -> Column:
+    return F.struct(F.lit(strategy).alias("s"), groups.alias("g"))
 
-def _js_line_candidate(l: Column) -> Column:
-    """Per-line strategy cascade RN > Chrome > WinJS > Gecko; null if the
-    line matches none (the line is skipped, exactly the UDF behavior).
-    Returns struct(s: strategy ordinal, g: capture groups) — exactly one
-    regexp_replace group extraction per matched line; field selection by
-    strategy happens on the MATERIALIZED struct in the second transform."""
 
-    def tag(strategy: int, groups: Column) -> Column:
-        return F.struct(F.lit(strategy).alias("s"), groups.alias("g"))
+def _js_frame(i: Column, url: Column, func: Column, line: Column, col: Column) -> Column:
+    return frame_struct(
+        pos=i,
+        kind=F.lit("js"),
+        url=url,
+        func=F.coalesce(_nz(func), F.lit(UNKNOWN_FUNCTION)),
+        line=_int_or(line, -1),
+        col=_int_or(col, -1),
+    )
 
+
+def _matched_frames(lines: Column, candidate, build) -> Column:
+    """Per-line strategy cascade: ``candidate(line)`` tags the first matching
+    strategy with its capture groups in one regex run (null if none) and
+    ``build(tag, pos)`` reads the fields of the MATERIALIZED tag, so no
+    regex runs twice.  Unmatched lines are dropped."""
+    cands = F.filter(F.transform(lines, candidate), lambda x: x.isNotNull())
+    return F.transform(cands, build)
+
+
+# --- js: the standard stack property ----------------------------------------
+
+def _stack_prop_candidate(l: Column) -> Column:
+    """RN > Chrome > WinJS > Gecko; null if the line matches none."""
     cascade = (
         F.when(
             l.contains("address at") & l.rlike(RE_RN),
-            tag(0, _groups(l, RE_RN, 4)),
+            _tag(0, _groups(l, RE_RN, 4)),
         )
-        .when(l.rlike(RE_CHROME), tag(1, _groups(l, RE_CHROME, 4)))
-        .when(l.rlike(RE_WINJS), tag(2, _groups(l, RE_WINJS, 4)))
-        .when(l.rlike(RE_GECKO), tag(3, _groups(l, RE_GECKO, 5)))
+        .when(l.rlike(RE_CHROME), _tag(1, _groups(l, RE_CHROME, 4)))
+        .when(l.rlike(RE_WINJS), _tag(2, _groups(l, RE_WINJS, 4)))
+        .when(l.rlike(RE_GECKO), _tag(3, _groups(l, RE_GECKO, 5)))
     )
-    # over-cap / sentinel-carrying lines never reach the backtracking
-    # regexes nor the _SEP group extraction (LINE_CAP note)
     return F.when(_line_ok(l), cascade)
 
 
-def _js_frames(text: Column) -> Column:
-    lines = F.split(F.coalesce(text, F.lit("")), "\n")
-    cands = F.filter(
-        F.transform(lines, _js_line_candidate), lambda x: x.isNotNull()
+def _stack_prop_frame(x: Column, i: Column) -> Column:
+    s, g = x["s"], x["g"]
+    gecko = s == F.lit(3)
+    # gecko groups: (func, args, url, line, col) -> skip args
+    url0 = F.when(gecko, g[2]).otherwise(g[1])
+    line0 = F.when(gecko, g[3]).otherwise(g[2])
+    col0 = F.when(gecko, F.element_at(g, 5)).otherwise(g[3])
+    # Chrome eval / native and Gecko "> eval" rewrites (rare: their extra
+    # regex runs only on rows whose url carries the token)
+    is_ch = s == F.lit(1)
+    ev = is_ch & url0.startswith("eval") & url0.rlike(RE_CHROME_EVAL)
+    evg = _groups_find(url0, RE_CHROME_EVAL, 3)
+    gev = gecko & url0.contains(" > eval") & url0.rlike(RE_GECKO_EVAL)
+    gevg = _groups_find(url0, RE_GECKO_EVAL, 2)
+    url = (
+        F.when(ev, evg[0])
+        .when(is_ch & url0.startswith("native"), F.lit("(native)"))
+        .when(gev, gevg[0])
+        .otherwise(url0)
+    )
+    line = F.when(ev, evg[1]).when(gev, gevg[1]).otherwise(line0)
+    col = F.when(ev, evg[2]).when(gev, F.lit(None)).otherwise(col0)
+    return _js_frame(i, url, g[0], line, col)
+
+
+# --- js: the Opera formats ---------------------------------------------------
+
+def _opera11_candidate(l: Column) -> Column:
+    return F.when(
+        _line_ok(l),
+        F.when(l.rlike(RE_OPERA11), _tag(0, _groups_find(l, RE_OPERA11, 3)))
+        .when(l.rlike(RE_OPERA11_COL), _tag(1, _groups_find(l, RE_OPERA11_COL, 6))),
     )
 
-    def build(x: Column, i: Column) -> Column:
-        s, g = x["s"], x["g"]
-        gecko = s == F.lit(3)
-        # gecko groups: (func, args, url, line, col) -> skip args
-        func = g[0]
-        url0 = F.when(gecko, g[2]).otherwise(g[1])
-        line0 = F.when(gecko, g[3]).otherwise(g[2])
-        col0 = F.when(gecko, F.element_at(x["g"], 5)).otherwise(g[3])
-        # Chrome eval / native rewrites (rare: extra regex only on eval rows)
-        is_ch = s == F.lit(1)
-        ev = is_ch & url0.startswith("eval") & url0.rlike(RE_CHROME_EVAL)
-        evg = _groups_find(url0, RE_CHROME_EVAL, 3)
-        url = (
-            F.when(ev, evg[0])
-            .when(is_ch & url0.startswith("native"), F.lit("(native)"))
-            .otherwise(url0)
-        )
-        line = F.when(ev, evg[1]).otherwise(line0)
-        col = F.when(ev, evg[2]).otherwise(col0)
-        return _frame(
-            pos=i,
-            kind=F.lit("js"),
-            url=url,
-            func=F.coalesce(_nz(func), F.lit(UNKNOWN_FUNCTION)),
-            line=_int_or(line, -1),
-            col=_int_or(col, -1),
-        )
 
-    return F.transform(cands, build)
+def _opera11_frame(x: Column, i: Column) -> Column:
+    s, g = x["s"], x["g"]
+    o11 = s == F.lit(0)
+    return _js_frame(
+        i,
+        url=F.when(o11, g[1]).otherwise(g[5]),
+        func=F.when(o11, g[2]).otherwise(F.coalesce(_nz(g[2]), g[3])),
+        line=g[0],
+        col=F.when(~o11, g[1]),
+    )
+
+
+def _opera9_candidate(l: Column) -> Column:
+    return F.when(
+        _line_ok(l),
+        F.when(l.rlike(RE_OPERA9_LINKED), _tag(0, _groups(l, RE_OPERA9_LINKED, 3)))
+        .when(l.rlike(RE_OPERA9_INLINE), _tag(1, _groups(l, RE_OPERA9_INLINE, 4)))
+        .when(l.rlike(RE_OPERA9_FUNC), _tag(2, F.array().cast("array<string>"))),
+    )
+
+
+def _opera9_frame(x: Column, i: Column) -> Column:
+    s, g = x["s"], x["g"]
+    return _js_frame(
+        i,
+        url=F.when(s == 0, g[1]).when(s == 1, g[2]).otherwise(F.lit("")),
+        func=F.when(s == 0, g[2]).when(s == 1, g[3]),
+        line=F.when(s != 2, g[0]),
+        col=F.lit(None),
+    )
+
+
+def _strided(lines: Column, start: int) -> Column:
+    """Every second line from ``start`` (the Opera stacktrace stride)."""
+    return F.filter(lines, lambda l, i: (i >= start) & (i % 2 == start % 2))
+
+
+def _js_pack(text: Column, message: Column) -> Column:
+    """``compute_stack_trace``: Opera 11, stack property, Opera 10, Opera 9
+    message, first non-empty wins.  Only Opera-marker rows evaluate the
+    whole cascade; the rest can only match the stack property."""
+    stack = F.coalesce(text, F.lit(""))
+    msg = F.coalesce(message, F.lit(""))
+    lines = F.split(stack, "\n")
+    msg_lines = F.split(msg, "\n")
+    stack_prop = _matched_frames(lines, _stack_prop_candidate, _stack_prop_frame)
+    opera10 = F.when(
+        F.size(lines) >= 2,
+        _matched_frames(_strided(lines, 0), _opera9_candidate, _opera9_frame),
+    )
+    opera9 = F.when(
+        F.size(msg_lines) >= 4,
+        _matched_frames(_strided(msg_lines, 2), _opera9_candidate, _opera9_frame),
+    )
+    cascade = F.array(
+        _pack(_matched_frames(_strided(lines, 0), _opera11_candidate, _opera11_frame),
+              mode=F.lit("stacktrace")),
+        _pack(stack_prop, mode=F.lit("stack")),
+        _pack(opera10, mode=F.lit("stacktrace")),
+        _pack(opera9, mode=F.lit("multiline")),
+    )
+    first = F.try_element_at(F.filter(cascade, lambda p: F.size(p["frames"]) > 0), F.lit(1))
+    marked = stack.rlike(RE_OPERA_MARKER) | msg.rlike(RE_OPERA_MARKER)
+    return F.when(marked, first).otherwise(_pack(stack_prop, mode=F.lit("stack")))
 
 
 # --- jvm --------------------------------------------------------------------
@@ -234,13 +339,26 @@ def _jvm_frames(lines: Column) -> Column:
         line = F.when(g[2] == "Native Method", F.lit(-2)).otherwise(_int_or(g[3], -1))
         return F.when(
             x["m"],
-            _frame(
+            frame_struct(
                 pos=i, kind=F.lit("jvm"),
                 cls=g[0], method=g[1], src=g[2], line=line,
             ),
-        ).otherwise(_frame(pos=i, kind=F.lit("jvm_raw"), raw=x["raw"]))
+        ).otherwise(frame_struct(pos=i, kind=F.lit("jvm_raw"), raw=x["raw"]))
 
     return F.transform(parsed, build)
+
+
+def _jvm_pack(text: Column) -> Column:
+    txt = F.coalesce(text, F.lit(""))
+    lines = F.split(txt, "\n")
+    first = _trim_ws(F.get(lines, 0))
+    return _pack(
+        _jvm_frames(lines),
+        is_empty=txt == "",
+        hdr_ok=first.rlike(RE_JAVA_HEADER),
+        hdr_typ=F.regexp_extract(first, RE_JAVA_HEADER, 1),
+        hdr_msg=F.regexp_extract(first, RE_JAVA_HEADER, 2),
+    )
 
 
 # --- apple ------------------------------------------------------------------
@@ -261,36 +379,155 @@ def _apple_frames(text: Column) -> Column:
         g = x["g"]
         return F.when(
             x["m"],
-            _frame(
+            frame_struct(
                 pos=i, kind=F.lit("apple"), raw=x["raw"],
                 prefix=g[0], lib=g[2], tok=g[4],
                 addr=_nz(g[5]).try_cast("long"),
             ),
-        ).otherwise(_frame(pos=i, kind=F.lit("apple_raw"), raw=x["raw"]))
+        ).otherwise(frame_struct(pos=i, kind=F.lit("apple_raw"), raw=x["raw"]))
 
     return F.transform(parsed, build)
 
 
+# --- MetricKit --------------------------------------------------------------
+
+_MK_LEAF_FIELDS = ("binaryName", "binaryUUID", "offsetIntoBinaryTextSegment", "offsetAddress")
+_MK_LEAF = ",".join(f"{n}:variant" for n in _MK_LEAF_FIELDS)
+_MK_LEAF_T = f"struct<{_MK_LEAF}>"
+_MK_NODE_T = f"struct<{_MK_LEAF},subFrames:variant>"
+_MK_STACK_T = "struct<callStackRootFrames:variant,callStackFrames:variant>"
+
+
+def _mk_text(v: Column) -> Column:
+    """A JSON string as itself; any other value (or none) as ''."""
+    return F.when(
+        F.schema_of_variant(v) == "STRING", F.try_variant_get(v, "$", "string")
+    ).otherwise(F.lit(""))
+
+
+def _mk_frame(f: Column, si: Column) -> Column:
+    off = F.coalesce(
+        F.try_variant_get(f["offsetIntoBinaryTextSegment"], "$", "bigint"),
+        F.try_variant_get(f["offsetAddress"], "$", "bigint"),
+        F.lit(0),
+    )
+    return frame_struct(
+        kind=F.lit("mk"), stack_idx=si,
+        bin=_mk_text(f["binaryName"]), buuid=_mk_text(f["binaryUUID"]), addr=off,
+    )
+
+
+def _mk_leaf(f: Column) -> Column:
+    return F.struct(*[f[n] for n in _MK_LEAF_FIELDS])
+
+
+def _mk_stack(c: Column, si: Column, steps: Column) -> Column:
+    """struct(frames, over) of one call stack: the first-sub-frame chain
+    walked for ``steps`` levels, then the flat list; ``over`` is set when
+    the chain goes on past the walk."""
+    walk = F.aggregate(
+        F.sequence(F.lit(1), steps),
+        F.struct(
+            F.try_variant_get(c["callStackRootFrames"], "$[0]", _MK_NODE_T).alias("f"),
+            F.array().cast(f"array<{_MK_LEAF_T}>").alias("out"),
+        ),
+        lambda acc, _: F.when(acc["f"].isNull(), acc).otherwise(
+            F.struct(
+                F.try_variant_get(acc["f"]["subFrames"], "$[0]", _MK_NODE_T).alias("f"),
+                F.array_append(acc["out"], _mk_leaf(acc["f"])).alias("out"),
+            )
+        ),
+    )
+    flat = F.filter(
+        F.try_variant_get(c["callStackFrames"], "$", f"array<{_MK_LEAF_T}>"),
+        lambda f: f.isNotNull(),
+    )
+    return _let(walk, lambda w: F.struct(
+        F.transform(
+            F.concat(w["out"], F.coalesce(flat, F.array().cast(f"array<{_MK_LEAF_T}>"))),
+            lambda f: _mk_frame(f, si),
+        ).alias("frames"),
+        w["f"].isNotNull().alias("over"),
+    ))
+
+
+def _mk_falsy(v: Column) -> Column:
+    """Python truthiness of a JSON value is false (null, false, 0, "", {})."""
+    typ = F.schema_of_variant(v)
+    return (
+        v.isNull() | F.is_variant_null(v) | (typ == "OBJECT<>")
+        | ((typ == "STRING") & (F.try_variant_get(v, "$", "string") == ""))
+        | ((typ != "STRING") & F.coalesce(F.try_variant_get(v, "$", "double") == 0, F.lit(False)))
+    )
+
+
+def _mk_pack(src: Column) -> Column:
+    """``metrickit.flatten_metrickit`` + ``parse._parse_mk``.  Each step is
+    bound once with ``_let``; a step past a failed one reads NULL."""
+    # every chain level is a JSON object, so the text's '{' count bounds
+    # the walk (keeps short reports from paying MK_DEPTH_CAP steps)
+    braces = F.length(src) - F.length(F.replace(src, F.lit("{"), F.lit("")))
+    steps = F.greatest(F.least(F.lit(MK_DEPTH_CAP), braces), F.lit(1))
+    doc = F.struct(F.try_parse_json(src).alias("v"), steps.alias("n"))
+
+    def pack(v: Column, top: Column, stacks: Column, per: Column) -> Column:
+        error = (
+            F.when(v.isNull(), F.lit(ERR_MK_JSON))
+            .when(top.isNull(), F.lit(ERR_MK_NOT_OBJECT))
+            .when(stacks.isNull() & ~_mk_falsy(top["callStacks"]), F.lit(ERR_MK_NOT_LIST))
+            .when(F.exists(per, lambda p: p["over"]), F.lit(ERR_MK_DEPTH))
+        )
+        # an empty call stack still contributes an mk_empty entry
+        items = F.flatten(F.transform(per, lambda p, si: F.when(
+            F.size(p["frames"]) > 0, p["frames"]
+        ).otherwise(F.array(frame_struct(kind=F.lit("mk_empty"), stack_idx=si)))))
+        frames = F.coalesce(
+            F.transform(items, lambda x, i: x.withField("pos", i)), F.array().cast(_FRAMES_T)
+        )
+        return _pack(F.when(error.isNull(), frames), error=error)
+
+    return _let(doc, lambda d: _let(
+        F.try_variant_get(d["v"], "$", "struct<callStacks:variant>"),
+        lambda top: _let(
+            F.try_variant_get(top["callStacks"], "$", f"array<{_MK_STACK_T}>"),
+            lambda stacks: _let(
+                F.transform(stacks, lambda c, si: _mk_stack(c, si, d["n"])),
+                lambda per: pack(d["v"], top, stacks, per),
+            ),
+        ),
+    ))
+
+
 # --- the two-stage assembly -------------------------------------------------
 
-def pre_parsed_expr(text: Column, route: Column, sql_eligible: Column) -> Column:
-    """Stage A: the expensive per-line arrays (plus the jvm header fields),
-    computed exactly once per row inside one struct.  ``sql_eligible``
-    excludes rows the Python UDF must handle (mk, Opera-marker js)."""
-    jvm_txt = F.coalesce(text, F.lit(""))
-    jvm_lines = F.split(jvm_txt, "\n")
-    first_trim = _trim_ws(F.get(jvm_lines, 0))
-    pack = F.struct(
-        F.when(route == "js", _js_frames(text))
-        .when(route == "jvm", _jvm_frames(jvm_lines))
-        .when(route == "apple", _apple_frames(text))
-        .alias("frames"),
-        F.when(route == "jvm", jvm_txt == "").alias("is_empty"),
-        F.when(route == "jvm", first_trim.rlike(RE_JAVA_HEADER)).alias("hdr_ok"),
-        F.when(route == "jvm", F.regexp_extract(first_trim, RE_JAVA_HEADER, 1)).alias("hdr_typ"),
-        F.when(route == "jvm", F.regexp_extract(first_trim, RE_JAVA_HEADER, 2)).alias("hdr_msg"),
+def _pack(frames: Column | None, mode=None, error=None, is_empty=None,
+          hdr_ok=None, hdr_typ=None, hdr_msg=None) -> Column:
+    """One route's stage-A result, in the single struct type every route
+    shares."""
+    def c(v, t):
+        return (F.lit(None) if v is None else v).cast(t)
+
+    return F.struct(
+        c(frames, _FRAMES_T).alias("frames"),
+        c(mode, "string").alias("mode"),
+        c(error, "string").alias("error"),
+        c(is_empty, "boolean").alias("is_empty"),
+        c(hdr_ok, "boolean").alias("hdr_ok"),
+        c(hdr_typ, "string").alias("hdr_typ"),
+        c(hdr_msg, "string").alias("hdr_msg"),
     )
-    return F.when(sql_eligible & route.isin("js", "jvm", "apple"), pack)
+
+
+def pre_parsed_expr(text: Column, route: Column, message: Column, mk_src: Column) -> Column:
+    """Stage A: the route's expensive per-line arrays (plus the jvm header
+    fields and the MetricKit error), computed exactly once per row inside
+    one struct.  ``mk_src`` is the MetricKit JSON of mk rows."""
+    return (
+        F.when(route == "js", _js_pack(text, message))
+        .when(route == "jvm", _jvm_pack(text))
+        .when(route == "apple", _pack(_apple_frames(text)))
+        .when(route == "mk", _mk_pack(mk_src))
+    )
 
 
 def parsed_expr(pp: Column, route: Column, name: Column, message: Column) -> Column:
@@ -299,21 +536,24 @@ def parsed_expr(pp: Column, route: Column, name: Column, message: Column) -> Col
     frames = pp["frames"]
     n = F.size(frames)
 
-    js_ok = n > 0
+    js_ok = F.coalesce(n > 0, F.lit(False))
     jvm_empty = pp["is_empty"]
     jvm_no_hdr = ~jvm_empty & ~pp["hdr_ok"]
     jvm_no_frames = ~jvm_empty & ~jvm_no_hdr & (n == 0)
     jvm_ok = ~(jvm_empty | jvm_no_hdr | jvm_no_frames)
 
+    js_message = F.coalesce(message, F.lit(""))
     out_name = (
         F.when(route == "js", F.when(js_ok, F.coalesce(name, F.lit(""))))
         .when(route == "jvm", F.when(jvm_ok, pp["hdr_typ"]))
     )
     out_message = (
-        F.when(route == "js", F.when(js_ok, F.coalesce(message, F.lit(""))))
+        F.when(route == "js", F.when(js_ok, F.when(
+            pp["mode"] == "multiline", F.split(js_message, "\n")[0]
+        ).otherwise(js_message)))
         .when(route == "jvm", F.when(jvm_ok, pp["hdr_msg"]))
     )
-    out_mode = F.when((route == "js") & js_ok, F.lit("stack"))
+    out_mode = F.when((route == "js") & js_ok, pp["mode"])
     out_error = (
         F.when(route == "js", F.when(~js_ok, F.lit(ERR_PARSE)))
         .when(
@@ -322,11 +562,12 @@ def parsed_expr(pp: Column, route: Column, name: Column, message: Column) -> Col
             .when(jvm_no_hdr, F.lit(ERR_INVALID))
             .when(jvm_no_frames, F.lit(ERR_NO_FRAMES)),
         )
+        .when(route == "mk", pp["error"])
     )
     out_frames = (
         F.when(route == "js", F.when(js_ok, frames))
         .when(route == "jvm", F.when(jvm_ok, frames))
-        .when(route == "apple", frames)
+        .when(route.isin("apple", "mk"), frames)
     ).cast(_FRAMES_T)
     return F.struct(
         out_name.cast("string").alias("name"),

@@ -1,10 +1,10 @@
 """Parse stage wiring: attach the parsed struct and explode the unified
 frame IR.
 
-Raw-text routes go through the vectorized pandas UDF
-(functions/parse.py); structured-array routes are pure JVM expressions:
-``arrays_zip`` + ``transform`` build the frames, and the mismatched-length
-check reproduces sourcemapprocessor/processor.go:260-267 /
+Every route is parsed by JVM expressions, so the plan holds no Python-eval
+node.  Raw-text routes use functions/parse_sql.py; structured-array routes
+build their frames here with ``arrays_zip`` + ``transform``, and the
+mismatched-length check reproduces sourcemapprocessor/processor.go:260-267 /
 proguardprocessor/log_processor.go:197-204 (including the reference's
 quirk that the output arrays are emptied *before* the check, so a
 mismatch leaves empty arrays behind).
@@ -15,23 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from symspark.config import PipelineConfig
-from symspark.functions.parse_arrow import parse_stack_arrow_udf as parse_stack_udf
+from symspark.functions import parse_sql
 from symspark.schemas import FRAME_SCHEMA
-
-_UDF_ROUTES = ("js", "jvm", "apple", "mk")
-
-# (field, sql type) in FRAME_SCHEMA order
-_FRAME_FIELDS = [(f.name, f.dataType.simpleString()) for f in FRAME_SCHEMA.fields]
-
-
-def frame_struct(**given: Column) -> Column:
-    """Build a full frame struct, nulling unspecified fields."""
-    cols = []
-    for name, typ in _FRAME_FIELDS:
-        c = given.get(name, F.lit(None))
-        cols.append(c.cast(typ).alias(name))
-    return F.struct(*cols)
-
 
 def _structured_parsed(cfg: PipelineConfig, kind: str) -> Column:
     """Parsed struct for a structured-array route (JVM-only expressions)."""
@@ -51,7 +36,7 @@ def _structured_parsed(cfg: PipelineConfig, kind: str) -> Column:
         )
         frames = F.transform(
             zipped,
-            lambda x, i: frame_struct(
+            lambda x, i: parse_sql.frame_struct(
                 pos=i, kind=F.lit("js"), url=x["u"], func=x["f"], line=x["l"], col=x["c"]
             ),
         )
@@ -77,7 +62,7 @@ def _structured_parsed(cfg: PipelineConfig, kind: str) -> Column:
         )
         frames = F.transform(
             zipped,
-            lambda x, i: frame_struct(
+            lambda x, i: parse_sql.frame_struct(
                 pos=i, kind=F.lit("jvm"), cls=x["c"], method=x["m"], line=x["l"], src=x["s"]
             ),
         )
@@ -105,25 +90,11 @@ def _structured_parsed(cfg: PipelineConfig, kind: str) -> Column:
 
 
 def attach_parsed(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Add the ``parsed`` column.
-
-    Default engine ("sql"): js / jvm / apple rows are parsed by JVM
-    regexp expressions (functions/parse_sql.py) — only MetricKit rows and
-    js rows carrying an Opera marker ship text to the Python UDF, so
-    Python-worker CPU stays out of the hot path.  ``cfg.parse_engine ==
-    "udf"`` routes every parsed row through the Arrow UDF instead (the
-    semantics oracle; tests pin sql == udf on the corpus)."""
-    from symspark.functions import parse_sql
-
+    """Add the ``parsed`` column: js / jvm / apple / mk rows are parsed by
+    the JVM expressions of functions/parse_sql.py, the structured routes
+    by :func:`_structured_parsed`.  No Python runs, so the plan keeps the
+    input's partitioning."""
     route = F.col(cfg.route_col)
-    in_udf = route.isin(*_UDF_ROUTES)
-    if cfg.parse_engine == "sql":
-        text = F.col("text")
-        message = F.col(cfg.exception_message_col)
-        opera = F.coalesce(text, F.lit("")).rlike(parse_sql.RE_OPERA_MARKER) | F.coalesce(
-            message, F.lit("")
-        ).rlike(parse_sql.RE_OPERA_MARKER)
-        in_udf = (route == "mk") | ((route == "js") & opera)
     # the MetricKit path reads the MetricKit attribute when present
     # (logs_processor.go:344 — even in the eventName-routed case); the
     # flattened transcript model falls back to text when the attribute is
@@ -133,58 +104,26 @@ def attach_parsed(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
         if cfg.metrickit_stack_trace_col in df.columns
         else F.col("text")
     )
-    udf_parsed = parse_stack_udf(
-        F.when(in_udf & (route == "mk"), mk_src).when(in_udf, F.col("text")),
-        F.when(in_udf, route),
-        F.col(cfg.exception_type_col),
-        F.col(cfg.exception_message_col),
+    # stage A: expensive per-line arrays, materialized ONCE as a
+    # multi-referenced non-cheap alias (survives CollapseProject)
+    df = df.withColumn(
+        "_pp",
+        parse_sql.pre_parsed_expr(
+            F.col("text"), route, F.col(cfg.exception_message_col), mk_src
+        ),
     )
-    if cfg.udf_parse_strategy == "join":
-        # Compute the UDF rows on a side branch and shuffle-hash-join them
-        # back: EvalPython nodes report UnknownPartitioning, so an inline
-        # UDF column destroys a bucketed input's partitioning and forces
-        # the regroup to re-shuffle the FULL table.  With the join, the hot
-        # path is JVM-only end-to-end — a conv_id-bucketed input carries
-        # its partitioning straight through explode + broadcast joins to
-        # the regroup (zero full-table exchanges); only the ~2% UDF branch
-        # shuffles.  The side is pre-aggregated to one turn_idx->parsed map
-        # per conversation and joined on conv_id ALONE: a co-partitioned
-        # join requires all its keys in the child partitioning
-        # (requireAllClusterKeysForCoPartition), so a (conv_id, turn_idx)
-        # join would have re-shuffled the bucketed big side anyway.
-        # shuffle_hash (not SMJ) keeps the streamed side sort-free.
-        # Requires unique (conv_id, turn_idx).
-        side = (
-            df.where(in_udf)
-            .groupBy("conv_id")
-            .agg(
-                F.map_from_entries(
-                    F.collect_list(F.struct(F.col("turn_idx"), udf_parsed))
-                ).alias("_parsed_udf_map")
-            )
-        )
-        df = df.join(side.hint("shuffle_hash"), ["conv_id"], "left")
-        udf_parsed = F.element_at(F.col("_parsed_udf_map"), F.col("turn_idx"))
     parsed = (
-        F.when(in_udf, udf_parsed)
-        .when(route == "js_structured", _structured_parsed(cfg, "js"))
-        .when(route == "jvm_structured", _structured_parsed(cfg, "jvm"))
-    )
-    if cfg.parse_engine == "sql":
-        # stage A: expensive per-line arrays, materialized ONCE as a
-        # multi-referenced non-cheap alias (survives CollapseProject)
-        df = df.withColumn(
-            "_pp", parse_sql.pre_parsed_expr(F.col("text"), route, ~in_udf)
-        )
-        parsed = parsed.when(
-            route.isin("js", "jvm", "apple"),
+        F.when(
+            route.isin("js", "jvm", "apple", "mk"),
             parse_sql.parsed_expr(
                 F.col("_pp"), route,
                 F.col(cfg.exception_type_col), F.col(cfg.exception_message_col),
             ),
         )
-        return df.withColumn("parsed", parsed).drop("_pp", "_parsed_udf_map")
-    return df.withColumn("parsed", parsed).drop("_parsed_udf_map")
+        .when(route == "js_structured", _structured_parsed(cfg, "js"))
+        .when(route == "jvm_structured", _structured_parsed(cfg, "jvm"))
+    )
+    return df.withColumn("parsed", parsed).drop("_pp")
 
 
 # record-level columns the frame enrichment joins need on every frame row

@@ -25,13 +25,14 @@ Semantics mirrored from parity.go:
   attributes on dual-route records)
 - the per-frame comparison array is emitted only when both routes are
   valid AND lengths match (parity.go:98-120)
-- duration: the reference times the per-record parse; in a vectorized
-  engine the parse runs per Arrow batch, so the harness reports the batch
-  wall-clock amortized per row (seconds, double) - the same quantity at
-  the same granularity the engine actually schedules.
+- duration: the reference times the per-record parse.  The harness times
+  the scalar parser (functions/parse.py, the pipeline parse's oracle) in
+  a minimal Arrow UDF and reports the batch wall-clock amortized per row
+  (seconds, double).
 
 The comparison itself is pure column algebra over the parsed frame IR: no
-extra Python pass beyond the (timed) parse.
+extra Python pass beyond the (timed) parse.  The pipeline never calls the
+harness.
 """
 
 from __future__ import annotations
@@ -40,9 +41,10 @@ import time
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from symspark.config import DEFAULT_CONFIG, PipelineConfig
-from symspark.functions.parse_arrow import PARSED_PA, _parse_js_arrow
+from symspark.functions.parse import _parse_js
 from symspark.schemas import PARSED_SCHEMA
 
 # status enum (parity.go:16-27)
@@ -66,13 +68,20 @@ _TIMED_SCHEMA = T.StructType(
 )
 
 
+_TIMED_PA = to_arrow_type(_TIMED_SCHEMA)
+
+
 @F.arrow_udf(_TIMED_SCHEMA)
 def _timed_parse_udf(text: pa.Array, name: pa.Array, message: pa.Array) -> pa.Array:
     t0 = time.perf_counter()
-    parsed = _parse_js_arrow(text, name, message)
+    parsed = [
+        _parse_js(*row)
+        for row in zip(text.to_pylist(), name.to_pylist(), message.to_pylist())
+    ]
     per_row = (time.perf_counter() - t0) / max(len(text), 1)
-    dur = pa.array([per_row] * len(text), type=pa.float64())
-    return pa.StructArray.from_arrays([parsed, dur], names=["parsed", "duration_sec"])
+    return pa.array(
+        [{"parsed": p, "duration_sec": per_row} for p in parsed], type=_TIMED_PA
+    )
 
 
 def add_parity_columns(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:

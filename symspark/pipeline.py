@@ -1,14 +1,13 @@
 """End-to-end parse -> enrich -> route -> aggregate pipeline.
 
 Physical design (SURVEY.md §4, §7):
-- ONE scan of the transcript table; gate/route are JVM expressions; the
-  vectorized parse UDF runs once (skip rows ship NULL text through Arrow).
-- ONE explicit shuffle: ``repartition(conv_id, turn_idx)`` right after
-  parse.  Both downstream branches (frame explode+enrich+regroup, and the
-  record-side join) consume the same exchange, which Spark materializes
-  once (ReusedExchange) — the frame regroup and the record join then need
-  no further exchanges because the clustering is preserved through
-  explode and the broadcast joins.
+- ONE scan of the transcript table; gate, route and the parse of every
+  route are JVM expressions (functions/parse_sql.py): the plan holds no
+  Python-eval node, so no row crosses to a Python worker.
+- ONE exchange: the regroup's ``groupBy(conv_id, turn_idx)`` after the
+  frame explode and the broadcast joins, which keep the scan's
+  partitioning.  Over a conv_id-bucketed input even that exchange goes:
+  the bucketing reaches the regroup unchanged.
 - ALL enrichment joins are broadcast hash joins against pre-aggregated
   dimension tables (no dim-side explosion, no shuffle joins).
 - Skew: hot conv_ids are harmless here because the shuffle key is
@@ -241,9 +240,10 @@ def run_pipeline(
     """Return the enriched record-level DataFrame (one row per input turn,
     stable under (conv_id, turn_idx) ordering).
 
-    Linear physical plan: scan -> route exprs -> ONE vectorized parse UDF ->
-    outer-explode (payload rides along) -> six broadcast hash joins ->
-    outcome exprs -> ONE exchange (the regroup) -> record assembly exprs.
+    Linear physical plan: scan -> route exprs -> JVM parse exprs (no
+    Python worker) -> outer-explode (payload rides along) -> six broadcast
+    hash joins -> outcome exprs -> ONE exchange (the regroup) -> record
+    assembly exprs.
     """
     df = route_op.gate_and_route(transcripts, cfg)
     df = frames_op.attach_parsed(df, cfg)

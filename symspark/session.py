@@ -16,7 +16,8 @@ def get_spark(
     """Build a session tuned for this pipeline.
 
     AQE is on (runtime coalescing + skew-join splitting as a backstop to our
-    explicit conv_id salting); Arrow is on for the pandas parse UDFs.
+    explicit conv_id salting); Arrow is on for the catalog's pandas UDFs
+    and the parity harness.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     cores = os.environ.get("SPARK_GRAFT_CPUS")

@@ -367,63 +367,31 @@ def test_decode_header_pure():
     assert mm.decode_header(None) is None
 
 
-def test_udf_join_back_strategy(spark, fixture_dir, tmp_path):
-    """udf_parse_strategy='join': (1) byte-identical output to the inline
-    default; (2) over a conv_id-bucketed input the ONLY conv_id-keyed
-    exchange left is the ~2% UDF side branch — the scan -> parse ->
-    explode -> broadcast-join -> regroup hot path carries the bucketing
-    (the 100 TB shape: no full-table shuffle)."""
-    import dataclasses
-
-    from symspark.config import DEFAULT_CONFIG
-
-    cfg_j = dataclasses.replace(DEFAULT_CONFIG, udf_parse_strategy="join")
+def test_default_plan_has_no_python_eval(spark, fixture_dir, tmp_path):
+    """The default pipeline plan parses without Python: no *EvalPython
+    node.  So over a conv_id-bucketed table the scan's partitioning reaches
+    the regroup with no conv_id exchange at all (the 100 TB shape: no
+    full-table shuffle), and the sink aggregates equal the unbucketed run's."""
     lookups = load_lookups(spark, fixture_dir)
     t = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
-    out_i = run_pipeline(t, lookups)
-    out_j = run_pipeline(t, lookups, cfg_j)
-    ai = {r["sink"]: tuple(r)[1:] for r in sink_aggregates(out_i).collect()}
-    aj = {r["sink"]: tuple(r)[1:] for r in sink_aggregates(out_j).collect()}
-    assert aj == ai
-    diff = (
-        out_j.select("conv_id", "turn_idx", F.col("text").alias("jt"))
-        .join(out_i.select("conv_id", "turn_idx", "text"), ["conv_id", "turn_idx"], "full")
-        .where(~F.col("jt").eqNullSafe(F.col("text")))
-        .count()
-    )
-    assert diff == 0
-
-    spark.sql("DROP TABLE IF EXISTS t_bucketed_join_strat")
+    spark.sql("DROP TABLE IF EXISTS t_bucketed_plan")
     (
         t.write.mode("overwrite").bucketBy(8, "conv_id").sortBy("conv_id", "turn_idx")
         .format("parquet").option("path", str(tmp_path / "t_bucketed"))
-        .saveAsTable("t_bucketed_join_strat")
+        .saveAsTable("t_bucketed_plan")
     )
-    plan = (
-        run_pipeline(spark.table("t_bucketed_join_strat"), lookups, cfg_j)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    lines = plan.splitlines()
+    out = run_pipeline(t, lookups)
+    out_b = run_pipeline(spark.table("t_bucketed_plan"), lookups)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan_b = out_b._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan and "EvalPython" not in plan_b, plan
+    assert "Exchange hashpartitioning(conv_id" not in plan_b, plan_b
 
-    def subtree(i):
-        ind = len(lines[i]) - len(lines[i].lstrip(" +-:|"))
-        out = []
-        for line in lines[i + 1:]:
-            ii = len(line) - len(line.lstrip(" +-:|"))
-            if ii <= ind:
-                break
-            out.append(line)
-        return "\n".join(out)
+    def aggs(df):
+        return {r["sink"]: tuple(r)[1:] for r in sink_aggregates(df).collect()}
 
-    exch = [i for i, l in enumerate(lines) if "Exchange hashpartitioning(conv_id" in l]
-    # every surviving conv_id exchange is on the ~2% UDF side branch (its
-    # subtree holds the ArrowEvalPython, never the frame explode): the
-    # full-table regroup needs NO exchange over the bucketed input
-    assert exch, plan
-    for i in exch:
-        st = subtree(i)
-        assert "ArrowEvalPython" in st and "Generate" not in st, st
-    spark.sql("DROP TABLE IF EXISTS t_bucketed_join_strat")
+    assert aggs(out_b) == aggs(out)
+    spark.sql("DROP TABLE IF EXISTS t_bucketed_plan")
 
 
 def test_prepare_dims_large_store_path(spark, fixture_dir):

@@ -1,6 +1,8 @@
 """Real source-map decoding + end-to-end parity with the reference's own
 golden test (sourcemapprocessor/symbolicator_test.go:41-56) using the real
-artifacts in /root/reference/test_assets."""
+artifacts of the reference checkout's test_assets directory.  Tests that
+read those artifacts skip when the checkout is absent; the same behaviours
+are pinned on a self-contained store in test_sourcemap_fixture.py."""
 
 import os
 
@@ -17,6 +19,10 @@ from symspark.sources.sourcemap_build import (
 )
 
 ASSETS = "/root/reference/test_assets"
+needs_assets = pytest.mark.skipif(
+    not os.path.isdir(ASSETS),
+    reason=f"reference test assets not present at {ASSETS}",
+)
 
 
 def test_vlq_decode():
@@ -27,6 +33,7 @@ def test_vlq_decode():
     assert vlq_decode("gB") == [16]
 
 
+@needs_assets
 def test_decode_basic_mapping():
     toks = build_tokens(open(os.path.join(ASSETS, "basic-mapping.js.map")).read())
     assert len(toks) == 12
@@ -40,6 +47,7 @@ def test_decode_basic_mapping():
     }
 
 
+@needs_assets
 def test_extract_mapping_url_last_wins():
     src = open(os.path.join(ASSETS, "basic-mapping.js")).read()
     # the file embeds earlier sourceMappingURL comments inside Blob strings;
@@ -47,6 +55,7 @@ def test_extract_mapping_url_last_wins():
     assert extract_sourcemap_url(src) == "basic-mapping.js.map"
 
 
+@needs_assets
 def test_build_store_from_dir():
     tokens, store = build_store_from_dir(ASSETS)
     keys = set(zip(store.column("url_base").to_pylist(), store.column("build_uuid").to_pylist()))
@@ -84,6 +93,7 @@ def _run_one(spark, lookups, cfg, text, sm_uuid=""):
     return run_pipeline(df, lookups, cfg).collect()[0]
 
 
+@needs_assets
 def test_reference_golden_compat_mode(spark, real_lookups):
     """Replicates symbolicator_test.go:41-44: frame (line 0, col 34) on
     https://www.honeycomb.io/assets/js/basic-mapping.js symbolicates to
@@ -98,6 +108,7 @@ def test_reference_golden_compat_mode(spark, real_lookups):
     assert r["exception_symbolicator_failed"] is False
 
 
+@needs_assets
 def test_reference_golden_uuid_scoped(spark, real_lookups):
     """symbolicator_test.go:53-56: uuid-scoped map, same mapping."""
     cfg = PipelineConfig(sourcemap_reference_compat=True)
@@ -109,6 +120,7 @@ def test_reference_golden_uuid_scoped(spark, real_lookups):
     assert r["text"] == "Error: x\n    at bar(uuid-mapping.js:8:1)"
 
 
+@needs_assets
 def test_spec_orientation_lookup(spark, real_lookups):
     """Engine default (spec orientation): (line 0, col 34) hits the token AT
     generated column 34 -> the 'bar' declaration at source 4:10."""
@@ -120,6 +132,7 @@ def test_spec_orientation_lookup(spark, real_lookups):
     assert r["text"] == "Error: x\n    at bar(basic-mapping.js:4:10)"
 
 
+@needs_assets
 def test_missing_file_errors(spark, real_lookups):
     """symbolicator_test.go:59-61: unknown file -> fetch error."""
     cfg = PipelineConfig(sourcemap_reference_compat=True)
