@@ -25,6 +25,14 @@ from symspark.config import PipelineConfig
 
 ERR_PARTIAL = "symbolication failed for some stack frames"  # errPartialSymbolication
 
+# processor stamps (honeycomb_processor_type/_version, processor.go:152-154)
+JS_PROCESSOR_TYPE = "source_map_symbolicator"  # sourcemapprocessor/factory.go:16
+JS_PROCESSOR_VERSION = "1.0.4"  # factory.go:20
+JVM_PROCESSOR_TYPE = "proguard_symbolicator"  # proguardprocessor/factory.go:18
+JVM_PROCESSOR_VERSION = "1.0.1"  # factory.go:23
+APPLE_PROCESSOR_TYPE = "dsym_symbolicator"  # dsymprocessor/factory.go:16
+APPLE_PROCESSOR_VERSION = "1.0.2"  # factory.go:20
+
 # frame fields produced by the parse/explode stage (schemas.FRAME_SCHEMA)
 _FRAME_FIELDS = [
     "pos", "stack_idx", "kind", "url", "func", "line", "col", "cls", "method",
@@ -145,7 +153,7 @@ def assemble_records(grouped: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Build the final record columns from the regrouped frame arrays."""
     df = grouped.withColumn("efs", _patched_frames(F.col("efs")))
 
-    route = F.col(cfg.route_col)
+    route = F.col("route")
     is_js = route.isin("js", "js_structured")
     is_jvm = route.isin("jvm", "jvm_structured")
     parsed_route = route.isin("js", "jvm")
@@ -157,12 +165,12 @@ def assemble_records(grouped: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # --- record-level pre-frame errors ---
     missing = "missing attribute: %s"
     pre_err = (
-        F.when(is_jvm & F.col(cfg.proguard_uuid_col).isNull(),
+        F.when(is_jvm & F.col("proguard_uuid").isNull(),
                F.lit(missing % "app.debug.proguard_uuid"))  # log_processor.go:117-124
         .when(is_jvm | is_js, F.col("p_error"))  # parse error / mismatched lengths
-        .when((route == "apple") & F.col(cfg.build_uuid_col).isNull(),
+        .when((route == "apple") & F.col("build_uuid").isNull(),
               F.lit(missing % "app.debug.build_uuid"))  # logs_processor.go:169-171
-        .when((route == "apple") & F.col(cfg.app_executable_col).isNull(),
+        .when((route == "apple") & F.col("app_executable").isNull(),
               F.lit(missing % "app.bundle.executable"))  # logs_processor.go:174-176
         .when(route == "mk", F.col("p_error"))  # invalid MetricKit JSON
     )
@@ -185,9 +193,9 @@ def assemble_records(grouped: DataFrame, cfg: PipelineConfig) -> DataFrame:
         parsed_route, F.format_string("%s: %s", F.col("p_name"), F.col("p_message"))  # M3
     ).when(
         structured_route
-        & F.col(cfg.exception_type_col).isNotNull()
-        & F.col(cfg.exception_message_col).isNotNull(),
-        F.format_string("%s: %s", F.col(cfg.exception_type_col), F.col(cfg.exception_message_col)),
+        & F.col("exception_type").isNotNull()
+        & F.col("exception_message").isNotNull(),
+        F.format_string("%s: %s", F.col("exception_type"), F.col("exception_message")),
     )
     body_empty = body.isNull() | (body == "")
     js_jvm_text = (
@@ -212,8 +220,8 @@ def assemble_records(grouped: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # failure it is left untouched.  When absent on input (flattened
     # eventName case) the parsed JSON (= text) is preserved on success.
     mk_attr_in = (
-        F.col(cfg.metrickit_stack_trace_col)
-        if cfg.metrickit_stack_trace_col in grouped.columns
+        F.col("metrickit_stacktrace_json")
+        if "metrickit_stacktrace_json" in grouped.columns
         else F.lit(None).cast("string")
     )
     mk_json_out = F.when(mk_success & ~preserve, F.lit(None).cast("string")).otherwise(
@@ -234,66 +242,66 @@ def assemble_records(grouped: DataFrame, cfg: PipelineConfig) -> DataFrame:
     jvm_mismatch = (
         (route == "jvm_structured")
         & F.col("p_error").isNotNull()
-        & F.col(cfg.proguard_uuid_col).isNotNull()
+        & F.col("proguard_uuid").isNotNull()
     )
 
     jvm_flat = F.flatten(F.filter(F.transform(efs, lambda x: x["m_jvm"]), lambda a: a.isNotNull()))
 
     out_cols = {
         "text": text_out,
-        cfg.exception_type_col: (
+        "exception_type": (
             F.when(parsed_route & pre_err.isNull(), F.col("p_name"))
             .when(mk_success, F.lit("Unknown Error"))  # M12 fallback
-            .otherwise(F.col(cfg.exception_type_col))
+            .otherwise(F.col("exception_type"))
         ),
-        cfg.exception_message_col: (
+        "exception_message": (
             F.when(parsed_route & pre_err.isNull(), F.col("p_message"))
             .when(mk_success, F.lit("Unknown Error"))
-            .otherwise(F.col(cfg.exception_message_col))
+            .otherwise(F.col("exception_message"))
         ),
-        cfg.js_columns_col: F.when(js_ok, arr("m_col", "array<bigint>"))
-        .when(js_mismatch, empty_l).otherwise(F.col(cfg.js_columns_col)),
-        cfg.js_functions_col: F.when(js_ok, arr("m_func", "array<string>"))
-        .when(js_mismatch, empty_s).otherwise(F.col(cfg.js_functions_col)),
-        cfg.js_lines_col: F.when(js_ok, arr("m_line", "array<bigint>"))
-        .when(js_mismatch, empty_l).otherwise(F.col(cfg.js_lines_col)),
-        cfg.js_urls_col: F.when(js_ok, arr("m_url", "array<string>"))
-        .when(js_mismatch, empty_s).otherwise(F.col(cfg.js_urls_col)),
-        cfg.jvm_classes_col: F.when(jvm_ok, F.transform(jvm_flat, lambda m: m["class_name"]))
-        .when(jvm_mismatch, empty_s).otherwise(F.col(cfg.jvm_classes_col)),
-        cfg.jvm_methods_col: F.when(jvm_ok, F.transform(jvm_flat, lambda m: m["method_name"]))
-        .when(jvm_mismatch, empty_s).otherwise(F.col(cfg.jvm_methods_col)),
-        cfg.jvm_lines_col: F.when(jvm_ok, F.transform(jvm_flat, lambda m: m["line_number"]))
-        .when(jvm_mismatch, empty_l).otherwise(F.col(cfg.jvm_lines_col)),
+        "st_columns": F.when(js_ok, arr("m_col", "array<bigint>"))
+        .when(js_mismatch, empty_l).otherwise(F.col("st_columns")),
+        "st_functions": F.when(js_ok, arr("m_func", "array<string>"))
+        .when(js_mismatch, empty_s).otherwise(F.col("st_functions")),
+        "st_lines": F.when(js_ok, arr("m_line", "array<bigint>"))
+        .when(js_mismatch, empty_l).otherwise(F.col("st_lines")),
+        "st_urls": F.when(js_ok, arr("m_url", "array<string>"))
+        .when(js_mismatch, empty_s).otherwise(F.col("st_urls")),
+        "st_classes": F.when(jvm_ok, F.transform(jvm_flat, lambda m: m["class_name"]))
+        .when(jvm_mismatch, empty_s).otherwise(F.col("st_classes")),
+        "st_methods": F.when(jvm_ok, F.transform(jvm_flat, lambda m: m["method_name"]))
+        .when(jvm_mismatch, empty_s).otherwise(F.col("st_methods")),
+        "st_jvm_lines": F.when(jvm_ok, F.transform(jvm_flat, lambda m: m["line_number"]))
+        .when(jvm_mismatch, empty_l).otherwise(F.col("st_jvm_lines")),
         # st_source_files is never rewritten (no mapped source-files slice in
         # the reference, log_processor.go:180-194)
-        cfg.original_stack_trace_col: orig_text,
-        "st_columns_original": F.when(js_ok & preserve, F.col(cfg.js_columns_col)),
-        "st_functions_original": F.when(js_ok & preserve, F.col(cfg.js_functions_col)),
-        "st_lines_original": F.when(js_ok & preserve, F.col(cfg.js_lines_col)),
-        "st_urls_original": F.when(js_ok & preserve, F.col(cfg.js_urls_col)),
-        "st_classes_original": F.when(jvm_ok & preserve, F.col(cfg.jvm_classes_col)),
-        "st_methods_original": F.when(jvm_ok & preserve, F.col(cfg.jvm_methods_col)),
-        "st_jvm_lines_original": F.when(jvm_ok & preserve, F.col(cfg.jvm_lines_col)),
-        "st_source_files_original": F.when(jvm_ok & preserve, F.col(cfg.jvm_source_files_col)),
-        cfg.metrickit_stack_trace_col: mk_json_out,
-        cfg.parsing_method_col: (
+        "exception_stacktrace_original": orig_text,
+        "st_columns_original": F.when(js_ok & preserve, F.col("st_columns")),
+        "st_functions_original": F.when(js_ok & preserve, F.col("st_functions")),
+        "st_lines_original": F.when(js_ok & preserve, F.col("st_lines")),
+        "st_urls_original": F.when(js_ok & preserve, F.col("st_urls")),
+        "st_classes_original": F.when(jvm_ok & preserve, F.col("st_classes")),
+        "st_methods_original": F.when(jvm_ok & preserve, F.col("st_methods")),
+        "st_jvm_lines_original": F.when(jvm_ok & preserve, F.col("st_jvm_lines")),
+        "st_source_files_original": F.when(jvm_ok & preserve, F.col("st_source_files")),
+        "metrickit_stacktrace_json": mk_json_out,
+        "exception_symbolicator_parsing_method": (
             F.when(parsed_route & pre_err.isNull(), F.lit("processor_parsed"))
-            .when(structured_route & ~(is_jvm & F.col(cfg.proguard_uuid_col).isNull()),
+            .when(structured_route & ~(is_jvm & F.col("proguard_uuid").isNull()),
                   F.lit("structured_stacktrace_attributes"))
         ),
-        cfg.processor_type_col: (
-            F.when(is_js, F.lit(cfg.js_processor_type))
-            .when(is_jvm, F.lit(cfg.jvm_processor_type))
-            .when(route.isin("apple", "mk"), F.lit(cfg.apple_processor_type))
+        "honeycomb_processor_type": (
+            F.when(is_js, F.lit(JS_PROCESSOR_TYPE))
+            .when(is_jvm, F.lit(JVM_PROCESSOR_TYPE))
+            .when(route.isin("apple", "mk"), F.lit(APPLE_PROCESSOR_TYPE))
         ),
-        cfg.processor_version_col: (
-            F.when(is_js, F.lit(cfg.js_processor_version))
-            .when(is_jvm, F.lit(cfg.jvm_processor_version))
-            .when(route.isin("apple", "mk"), F.lit(cfg.apple_processor_version))
+        "honeycomb_processor_version": (
+            F.when(is_js, F.lit(JS_PROCESSOR_VERSION))
+            .when(is_jvm, F.lit(JVM_PROCESSOR_VERSION))
+            .when(route.isin("apple", "mk"), F.lit(APPLE_PROCESSOR_VERSION))
         ),
-        cfg.failed_col: failed_out,
-        cfg.error_col: error_out,
+        "exception_symbolicator_failed": failed_out,
+        "exception_symbolicator_error": error_out,
         "frames_processed": F.when(processed & pre_err.isNull(), _isum(efs, "proc_inc")).otherwise(
             F.when(processed, F.lit(0))
         ),
@@ -311,7 +319,7 @@ def assemble_records(grouped: DataFrame, cfg: PipelineConfig) -> DataFrame:
         "outcome": F.when(~processed, F.lit("skip")).otherwise(
             F.when(failed_out, F.lit("failed")).otherwise(F.lit("ok"))
         ),
-        cfg.sink_col: F.when(~processed, F.lit("skip")).otherwise(
+        "sink": F.when(~processed, F.lit("skip")).otherwise(
             F.concat(route, F.lit("/"), F.when(failed_out, F.lit("failed")).otherwise(F.lit("ok")))
         ),
     }

@@ -1,14 +1,14 @@
 """Shared frame-outcome struct for the enrichment operators.
 
-Each operator (sourcemap / proguard / dsym) computes one outcome struct for
-its frame kinds; the pipeline coalesces them into a single set of outcome
-columns before the regroup.  All fields are JVM-side expressions — no
+Each operator (sourcemap / proguard / dsym) fills the flat ``o_*`` outcome
+columns for its frame kinds; the regroup packs them into one struct per
+frame.  All fields are JVM-side expressions — no
 Python in the enrich stage.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 OUTCOME_SCHEMA = T.StructType(
@@ -44,17 +44,6 @@ OUTCOME_SCHEMA = T.StructType(
 )
 
 _OUT_FIELDS = [(f.name, f.dataType.simpleString()) for f in OUTCOME_SCHEMA.fields]
-OUTCOME_FIELDS = [f.name for f in OUTCOME_SCHEMA.fields]
-OUTCOME_TYPES = {f.name: f.dataType.simpleString() for f in OUTCOME_SCHEMA.fields}
-
-
-def out_struct(**given: Column) -> Column:
-    """Build a full outcome struct, nulling unspecified fields."""
-    cols = []
-    for name, typ in _OUT_FIELDS:
-        c = given.get(name, F.lit(None))
-        cols.append(c.cast(typ).alias(name))
-    return F.struct(*cols)
 
 
 def init_outcome_cols(df):

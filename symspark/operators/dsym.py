@@ -25,6 +25,9 @@ from pyspark.sql import DataFrame, functions as F
 from symspark.config import PipelineConfig
 from symspark.operators.common import fill_outcomes
 
+# symbol-store root named in fetch-error text (dsymprocessor/store.go:28-38)
+DSYM_STORE_PREFIX = "/dsyms"
+
 _UUID_RE = "[0-9A-Z]{8}-[0-9A-Z]{4}-[0-9A-Z]{4}-[0-9A-Z]{4}-[0-9A-Z]{12}"
 
 
@@ -60,8 +63,8 @@ def enrich_apple(
     is_apple_raw = F.col("kind") == "apple_raw"
     is_mk = F.col("kind") == "mk"
 
-    binary_name = F.col(cfg.app_executable_col)  # app.bundle.executable
-    record_uuid = F.col(cfg.build_uuid_col)  # app.debug.build_uuid
+    binary_name = F.col("app_executable")  # app.bundle.executable
+    record_uuid = F.col("build_uuid")  # app.debug.build_uuid
 
     tok_is_uuid = F.col("tok").rlike(_UUID_RE)  # logs_processor.go:211,272-274
     # apple: resolve (uuid, bin) from the token (logs_processor.go:228-238)
@@ -107,7 +110,7 @@ def enrich_apple(
     # FetchError text: dsymprocessor/symbolicator.go:23-25 wrapping store.go:28-38
     fetch_err = F.format_string(
         "failed to fetch dSYM for %s: failed to find dSYM file: %s/%s.dSYM/Contents/Resources/DWARF/%s",
-        uuid, F.lit(cfg.dsym_store_prefix), uuid, bin_,
+        uuid, F.lit(DSYM_STORE_PREFIX), uuid, bin_,
     )
 
     # ---- apple crash-line outcomes (logs_processor.go:213-270) ----

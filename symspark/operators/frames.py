@@ -18,7 +18,8 @@ from symspark.config import PipelineConfig
 from symspark.functions import parse_sql
 from symspark.schemas import FRAME_SCHEMA
 
-def _structured_parsed(cfg: PipelineConfig, kind: str) -> Column:
+
+def _structured_parsed(kind: str) -> Column:
     """Parsed struct for a structured-array route (JVM-only expressions)."""
     if kind == "js":
         ref_keys = [  # names used in the mismatch error (factory.go:29-33)
@@ -27,12 +28,12 @@ def _structured_parsed(cfg: PipelineConfig, kind: str) -> Column:
             "exception.structured_stacktrace.lines",
             "exception.structured_stacktrace.urls",
         ]
-        cols = [cfg.js_columns_col, cfg.js_functions_col, cfg.js_lines_col, cfg.js_urls_col]
+        cols = ["st_columns", "st_functions", "st_lines", "st_urls"]
         zipped = F.arrays_zip(
-            F.col(cfg.js_columns_col).alias("c"),
-            F.col(cfg.js_functions_col).alias("f"),
-            F.col(cfg.js_lines_col).alias("l"),
-            F.col(cfg.js_urls_col).alias("u"),
+            F.col("st_columns").alias("c"),
+            F.col("st_functions").alias("f"),
+            F.col("st_lines").alias("l"),
+            F.col("st_urls").alias("u"),
         )
         frames = F.transform(
             zipped,
@@ -53,12 +54,12 @@ def _structured_parsed(cfg: PipelineConfig, kind: str) -> Column:
             "exception.structured_stacktrace.lines",
             "exception.structured_stacktrace.source_files",
         ]
-        cols = [cfg.jvm_classes_col, cfg.jvm_methods_col, cfg.jvm_lines_col, cfg.jvm_source_files_col]
+        cols = ["st_classes", "st_methods", "st_jvm_lines", "st_source_files"]
         zipped = F.arrays_zip(
-            F.col(cfg.jvm_classes_col).alias("c"),
-            F.col(cfg.jvm_methods_col).alias("m"),
-            F.col(cfg.jvm_lines_col).alias("l"),
-            F.col(cfg.jvm_source_files_col).alias("s"),
+            F.col("st_classes").alias("c"),
+            F.col("st_methods").alias("m"),
+            F.col("st_jvm_lines").alias("l"),
+            F.col("st_source_files").alias("s"),
         )
         frames = F.transform(
             zipped,
@@ -81,8 +82,8 @@ def _structured_parsed(cfg: PipelineConfig, kind: str) -> Column:
     )
     empty_frames = F.array().cast(f"array<{FRAME_SCHEMA.simpleString()}>")
     return F.struct(
-        F.col(cfg.exception_type_col).alias("name"),
-        F.col(cfg.exception_message_col).alias("message"),
+        F.col("exception_type").alias("name"),
+        F.col("exception_message").alias("message"),
         F.lit(None).cast("string").alias("mode"),
         F.when(~sizes_equal, mismatch_err).alias("error"),
         F.when(sizes_equal, frames).otherwise(empty_frames).alias("frames"),
@@ -94,14 +95,14 @@ def attach_parsed(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     the JVM expressions of functions/parse_sql.py, the structured routes
     by :func:`_structured_parsed`.  No Python runs, so the plan keeps the
     input's partitioning."""
-    route = F.col(cfg.route_col)
+    route = F.col("route")
     # the MetricKit path reads the MetricKit attribute when present
     # (logs_processor.go:344 — even in the eventName-routed case); the
     # flattened transcript model falls back to text when the attribute is
     # absent (SURVEY.md §1.3)
     mk_src = (
-        F.coalesce(F.col(cfg.metrickit_stack_trace_col), F.col("text"))
-        if cfg.metrickit_stack_trace_col in df.columns
+        F.coalesce(F.col("metrickit_stacktrace_json"), F.col("text"))
+        if "metrickit_stacktrace_json" in df.columns
         else F.col("text")
     )
     # stage A: expensive per-line arrays, materialized ONCE as a
@@ -109,7 +110,7 @@ def attach_parsed(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     df = df.withColumn(
         "_pp",
         parse_sql.pre_parsed_expr(
-            F.col("text"), route, F.col(cfg.exception_message_col), mk_src
+            F.col("text"), route, F.col("exception_message"), mk_src
         ),
     )
     parsed = (
@@ -117,11 +118,11 @@ def attach_parsed(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
             route.isin("js", "jvm", "apple", "mk"),
             parse_sql.parsed_expr(
                 F.col("_pp"), route,
-                F.col(cfg.exception_type_col), F.col(cfg.exception_message_col),
+                F.col("exception_type"), F.col("exception_message"),
             ),
         )
-        .when(route == "js_structured", _structured_parsed(cfg, "js"))
-        .when(route == "jvm_structured", _structured_parsed(cfg, "jvm"))
+        .when(route == "js_structured", _structured_parsed("js"))
+        .when(route == "jvm_structured", _structured_parsed("jvm"))
     )
     return df.withColumn("parsed", parsed).drop("_pp")
 

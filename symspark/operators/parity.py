@@ -88,16 +88,16 @@ def add_parity_columns(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> D
     """For rows that carry BOTH the structured JS arrays and a raw stack
     text, parse the raw text (timed) and compare frame-by-frame."""
     has_both = (
-        F.col(cfg.js_columns_col).isNotNull()
-        & F.col(cfg.js_functions_col).isNotNull()
-        & F.col(cfg.js_lines_col).isNotNull()
-        & F.col(cfg.js_urls_col).isNotNull()
+        F.col("st_columns").isNotNull()
+        & F.col("st_functions").isNotNull()
+        & F.col("st_lines").isNotNull()
+        & F.col("st_urls").isNotNull()
         & F.col("text").isNotNull()
     )
     timed = _timed_parse_udf(
         F.when(has_both, F.col("text")),
-        F.col(cfg.exception_type_col),
-        F.col(cfg.exception_message_col),
+        F.col("exception_type"),
+        F.col("exception_message"),
     )
     df = df.withColumn("_tp", timed)
     p = F.col("_tp")["parsed"]
@@ -110,8 +110,8 @@ def add_parity_columns(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> D
     pp_lines = F.transform(parser_frames, lambda q: F.when(q["line"] != -1, q["line"]))
     pp_cols = F.transform(parser_frames, lambda q: F.when(q["col"] != -1, q["col"]))
 
-    n_l, n_c = F.size(cfg.js_lines_col), F.size(cfg.js_columns_col)
-    n_f, n_u = F.size(cfg.js_functions_col), F.size(cfg.js_urls_col)
+    n_l, n_c = F.size("st_lines"), F.size("st_columns")
+    n_f, n_u = F.size("st_functions"), F.size("st_urls")
     tracekit_valid = (n_l == n_c) & (n_l == n_f) & (n_l == n_u)
     n_parsed = F.size(parser_frames)
 
@@ -119,10 +119,10 @@ def add_parity_columns(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> D
     # pcommon values read as ""/0 (parity.go:109-113)
     zipped = F.zip_with(
         F.arrays_zip(
-            F.col(cfg.js_urls_col).alias("u"),
-            F.col(cfg.js_functions_col).alias("f"),
-            F.col(cfg.js_lines_col).alias("l"),
-            F.col(cfg.js_columns_col).alias("c"),
+            F.col("st_urls").alias("u"),
+            F.col("st_functions").alias("f"),
+            F.col("st_lines").alias("l"),
+            F.col("st_columns").alias("c"),
         ),
         parser_frames,
         lambda s, q: (
@@ -154,10 +154,10 @@ def add_parity_columns(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> D
         df.withColumn("parity_status", status)
         .withColumn("parity_mismatch_count", gate(mismatches))
         .withColumn("parity_frame_verdicts", gate(verdicts))
-        .withColumn("tracekit_lines", gate(F.col(cfg.js_lines_col)))
-        .withColumn("tracekit_columns", gate(F.col(cfg.js_columns_col)))
-        .withColumn("tracekit_functions", gate(F.col(cfg.js_functions_col)))
-        .withColumn("tracekit_urls", gate(F.col(cfg.js_urls_col)))
+        .withColumn("tracekit_lines", gate(F.col("st_lines")))
+        .withColumn("tracekit_columns", gate(F.col("st_columns")))
+        .withColumn("tracekit_functions", gate(F.col("st_functions")))
+        .withColumn("tracekit_urls", gate(F.col("st_urls")))
         .withColumn("processor_parser_lines", gate(pp_lines))
         .withColumn("processor_parser_columns", gate(pp_cols))
         .withColumn("processor_parser_functions", gate(pp_funcs))

@@ -23,6 +23,9 @@ from pyspark.sql import DataFrame, functions as F
 from symspark.config import PipelineConfig
 from symspark.operators.common import MAX_UINT32, fill_outcomes
 
+# symbol-store root named in the fetch-error text of a missing mapping
+PROGUARD_STORE_PREFIX = "/proguard"
+
 
 def build_proguard_dims(mapping: DataFrame, store: DataFrame) -> tuple[DataFrame, DataFrame]:
     ranges = mapping.groupBy(
@@ -51,7 +54,7 @@ def enrich_jvm(
 
     is_jvm = F.col("kind") == "jvm"
     is_raw = F.col("kind") == "jvm_raw"
-    uuid = F.col(cfg.proguard_uuid_col)
+    uuid = F.col("proguard_uuid")
 
     frames = frames.join(
         store_dim, F.when(is_jvm, uuid) == store_dim["pgs_uuid"], "left"
@@ -70,7 +73,7 @@ def enrich_jvm(
     fetch_err = F.format_string(
         "failed to fetch ProGuard mapping for %s: failed to fetch proguard mapping: "
         "open %s/%s.txt: no such file or directory",
-        uuid, F.lit(cfg.proguard_store_prefix), uuid,
+        uuid, F.lit(PROGUARD_STORE_PREFIX), uuid,
     )
     matched = F.try_element_at(
         F.filter(F.col("pg_ranges"), lambda r: (line >= r["line_start"]) & (line <= r["line_end"])),

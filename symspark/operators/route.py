@@ -34,44 +34,48 @@ STACKTRACE_DETECTOR = (
 )
 
 
+# Per-processor language allow-lists: the reference's suggested routing
+# config (README.md:88-108,225-245,352-372), matched case-insensitively.
+JS_LANGUAGES = ("javascript", "webjs", "nodejs")
+JVM_LANGUAGES = ("java", "kotlin", "jvm", "android")
+APPLE_LANGUAGES = ("swift", "objc", "objective-c")
+
+
 def _lang_in(lang: Column, allowed: tuple[str, ...]) -> Column:
     # case-insensitive membership; missing attribute => not allowed
     # (processor.go:126-143, isLanguageAllowed :405-413)
-    return F.lower(lang).isin([a.lower() for a in allowed])
+    return F.lower(lang).isin(list(allowed))
 
 
 def gate_and_route(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Add the ``route`` column."""
-    if not (cfg.js_allowed_languages and cfg.jvm_allowed_languages and cfg.apple_allowed_languages):
-        raise ValueError("route stage requires non-empty language allow-lists")
-
     text = F.col("text")
-    lang = F.col(cfg.language_col)
+    lang = F.col("language")
     has_st = text.isNotNull() & text.rlike(STACKTRACE_DETECTOR)
 
-    js_ok = _lang_in(lang, cfg.js_allowed_languages)
-    jvm_ok = _lang_in(lang, cfg.jvm_allowed_languages)
-    apple_ok = _lang_in(lang, cfg.apple_allowed_languages)
+    js_ok = _lang_in(lang, JS_LANGUAGES)
+    jvm_ok = _lang_in(lang, JVM_LANGUAGES)
+    apple_ok = _lang_in(lang, APPLE_LANGUAGES)
 
     js_structured = (
-        F.col(cfg.js_columns_col).isNotNull()
-        & F.col(cfg.js_functions_col).isNotNull()
-        & F.col(cfg.js_lines_col).isNotNull()
-        & F.col(cfg.js_urls_col).isNotNull()
+        F.col("st_columns").isNotNull()
+        & F.col("st_functions").isNotNull()
+        & F.col("st_lines").isNotNull()
+        & F.col("st_urls").isNotNull()
     )
     jvm_structured = (
-        F.col(cfg.jvm_classes_col).isNotNull()
-        & F.col(cfg.jvm_methods_col).isNotNull()
-        & F.col(cfg.jvm_lines_col).isNotNull()
-        & F.col(cfg.jvm_source_files_col).isNotNull()
+        F.col("st_classes").isNotNull()
+        & F.col("st_methods").isNotNull()
+        & F.col("st_jvm_lines").isNotNull()
+        & F.col("st_source_files").isNotNull()
     )
-    is_mk = apple_ok & F.col(cfg.event_name_col).startswith("metrickit.diagnostic.")
+    is_mk = apple_ok & F.col("event_name").startswith("metrickit.diagnostic.")
     # Backwards-compat leg (dsymprocessor/logs_processor.go:113-117): no
     # stack-trace attribute, but the MetricKit attribute is present -> the
     # record still takes the MetricKit path.
     mk_attr = (
-        F.col(cfg.metrickit_stack_trace_col)
-        if cfg.metrickit_stack_trace_col in df.columns
+        F.col("metrickit_stacktrace_json")
+        if "metrickit_stacktrace_json" in df.columns
         else F.lit(None).cast("string")
     )
     is_mk_legacy = apple_ok & ~has_st & mk_attr.isNotNull()
@@ -87,4 +91,4 @@ def gate_and_route(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
         .when(jvm_ok, F.lit("jvm"))
         .otherwise(F.lit("skip"))
     )
-    return df.withColumn(cfg.route_col, route)
+    return df.withColumn("route", route)

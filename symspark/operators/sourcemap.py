@@ -23,6 +23,9 @@ from pyspark.sql import Column, DataFrame, functions as F
 from symspark.config import PipelineConfig
 from symspark.operators.common import MAX_UINT32, fill_outcomes
 
+# symbol-store root named in fetch-error text (sourcemapprocessor/store.go:47,56)
+SOURCEMAP_STORE_PREFIX = "/maps"
+
 _SCHEME_AUTH = r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/]*"
 _SCHEME_ONLY = r"^[A-Za-z][A-Za-z0-9+.\-]*:"
 
@@ -122,7 +125,7 @@ def enrich_js(
     is_js = F.col("kind") == "js"
     url = F.when(is_js, F.col("url"))
     base, query, url_base = url_base_cols(url)
-    uuid = F.coalesce(F.col(cfg.source_map_uuid_col), F.lit(""))
+    uuid = F.coalesce(F.col("source_map_uuid"), F.lit(""))
 
     # lookup orientation: spec = (row=line, col=col); reference-compat swaps
     # the two (see PipelineConfig.sourcemap_reference_compat)
@@ -157,7 +160,7 @@ def enrich_js(
     cache_key = F.when(uuid == "", url).otherwise(F.concat(url, F.lit("|"), uuid))
     # file-store path used in fetch-error text (store.go:47-56)
     store_path = F.concat(
-        F.lit(cfg.sourcemap_store_prefix),
+        F.lit(SOURCEMAP_STORE_PREFIX),
         F.when(uuid != "", F.concat(F.lit("/"), uuid)).otherwise(F.lit("")),
         F.when(F.col("sm_base") == ".", F.lit("")).otherwise(F.concat(F.lit("/"), F.col("sm_base"))),
         F.when(F.col("sm_query") != "", F.concat(F.lit("?"), F.col("sm_query"))).otherwise(F.lit("")),

@@ -99,28 +99,24 @@ def _pin(df: DataFrame) -> DataFrame:
 LOCALIZE_MAX_ROWS = 200_000
 
 
-def prepare_dims(lookups: Lookups, localize: bool | str = "auto") -> PreparedDims:
-    """Pre-aggregate the symbol dims and decide their join strategy.
-
-    ``localize="auto"`` (default) gates pinning on a per-dim row count:
-    small dims (the common case - a symbol store is tiny next to the fact
-    table) are materialized once into the executor cache (single
+def prepare_dims(lookups: Lookups) -> PreparedDims:
+    """Pre-aggregate the symbol dims and decide their join strategy by row
+    count.  Small dims (the common case - a symbol store is tiny next to
+    the fact table) are materialized once into the executor cache (single
     partition, JVM-only rebuilds) and get an explicit broadcast hint, so
     repeated pipeline actions pay one cheap cache read per broadcast.  A
     dim over LOCALIZE_MAX_ROWS stays an unpinned distributed DataFrame
     with NO broadcast hint - the enrichment join is then planned by AQE
-    (this is the large-store path).  ``True``/``False`` force the
-    small/large behavior.
+    (this is the large-store path).
     """
     sm = sourcemap.build_sourcemap_dims(lookups.sourcemap_tokens, lookups.sourcemap_store)
     pg = proguard.build_proguard_dims(lookups.proguard_mapping, lookups.proguard_store)
     ds = dsym.build_dsym_dims(lookups.dsym_symbols, lookups.dsym_store)
 
     def prep(d: DataFrame) -> DataFrame:
-        loc = localize
-        if loc == "auto":
-            loc = d.limit(LOCALIZE_MAX_ROWS + 1).count() <= LOCALIZE_MAX_ROWS
-        return F.broadcast(_pin(d)) if loc else d
+        if d.limit(LOCALIZE_MAX_ROWS + 1).count() <= LOCALIZE_MAX_ROWS:
+            return F.broadcast(_pin(d))
+        return d
 
     sm = tuple(prep(d) for d in sm)
     pg = tuple(prep(d) for d in pg)
@@ -264,16 +260,21 @@ def run_pipeline(
     return assemble.assemble_records(grouped, cfg)
 
 
-def sink_aggregates(enriched: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Per-sink counters mirroring the reference's internal telemetry
-    (SURVEY.md §2.6 A1-A3 + routed-row counts)."""
+# the per-sink counters (SURVEY.md §2.6 A1-A3 + routed-row counts), in
+# the order sink_aggregates emits them
+SINK_COUNTERS = ("rows", "frames_processed", "frames_failed", "fetch_failures")
+
+
+def sink_aggregates(enriched: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
+    """Per-sink counters mirroring the reference's internal telemetry.
+    ``keys`` adds grouping columns ahead of ``sink`` (the checkpointed run
+    groups by bucket)."""
+    by = [*keys, "sink"]
     return (
-        enriched.groupBy(cfg.sink_col)
+        enriched.groupBy(*by)
         .agg(
             F.count(F.lit(1)).alias("rows"),
-            F.sum(F.coalesce(F.col("frames_processed"), F.lit(0))).alias("frames_processed"),
-            F.sum(F.coalesce(F.col("frames_failed"), F.lit(0))).alias("frames_failed"),
-            F.sum(F.coalesce(F.col("fetch_failures"), F.lit(0))).alias("fetch_failures"),
+            *[F.sum(F.coalesce(F.col(c), F.lit(0))).alias(c) for c in SINK_COUNTERS[1:]],
         )
-        .orderBy(cfg.sink_col)
+        .orderBy(*by)
     )

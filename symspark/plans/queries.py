@@ -18,6 +18,7 @@ ANN similarity, text quality/lang-id/fingerprint/token-count).
 from __future__ import annotations
 
 import os
+import re
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
@@ -1235,7 +1236,17 @@ def _token_count(spark, sf_dir):
 # byte-exact pipeline goldens live in tests/test_pipeline.py.
 # ---------------------------------------------------------------------------
 
-_SF_TURNS = {"sf0.001": 6_000, "sf0.01": 60_000, "sf0.1": 600_000}
+TURNS_PER_SF = 6_000_000
+
+
+def sf_turns(sf: str) -> int:
+    """Transcript turns for a testdata dir name ``sf<number>``: 6M x SF
+    (sf0.001 -> 6,000, sf1.0 -> 6,000,000).  Any other name raises."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", sf)
+    n = round(TURNS_PER_SF * float(m.group(1))) if m else 0
+    if n < 1:
+        raise ValueError(f"testdata dir {sf!r} is not sf<number> with a positive scale factor")
+    return n
 
 
 def prepare(sf_dir: str) -> str:
@@ -1247,7 +1258,7 @@ def prepare(sf_dir: str) -> str:
     from symspark.sources.datagen import write_all
 
     sf = os.path.basename(os.path.normpath(sf_dir))
-    n = _SF_TURNS.get(sf, 6_000)
+    n = sf_turns(sf)
     out = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "..", "data", sf)
     out = os.path.normpath(out)
     write_all(out, n_turns=n)

@@ -18,6 +18,12 @@ def get_spark(
     AQE is on (runtime coalescing + skew-join splitting as a backstop to our
     explicit conv_id salting); Arrow is on for the catalog's pandas UDFs
     and the parity harness.
+
+    Three deployment settings come from the environment:
+    ``SPARK_GRAFT_MASTER`` (master when none is passed),
+    ``SPARK_GRAFT_CPUS`` (local thread count and shuffle partitions) and
+    ``SYMSPARK_DRIVER_MEM`` (driver heap).  Any other Spark conf goes in
+    ``extra_conf``, applied last.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     cores = os.environ.get("SPARK_GRAFT_CPUS")
@@ -40,14 +46,10 @@ def get_spark(
     # cost) packs a small-fixture multi-file table into ~2 input
     # partitions, serializing the whole scan->parse->join mega-stage no
     # matter how many cores exist (the round-2 scaling-floor bug).  In
-    # local mode default to 4m bins so each fixture shard is its own
-    # partition and all cores engage; a real cluster run (SPARK_GRAFT_MASTER
-    # or SYMSPARK_MAX_PARTITION_BYTES set) keeps/sets the production value,
+    # local mode use 4m bins so each fixture shard is its own partition
+    # and all cores engage; a cluster master keeps the production value,
     # where 100TB inputs dwarf any sane bin size.
-    max_part = os.environ.get(
-        "SYMSPARK_MAX_PARTITION_BYTES",
-        "4m" if master.startswith("local[") else "128m",
-    )
+    max_part = "4m" if master.startswith("local[") else "128m"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -66,46 +68,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SYMSPARK_DRIVER_MEM", default_mem))
         # the fused explode-stage consume method lands just over HotSpot's
         # 8KB JIT ceiling; without this flag it runs interpreted (~10x cost).
-        # SYMSPARK_JAVA_OPTS appends extra flags (e.g. GC tuning experiments)
-        .config(
-            "spark.driver.extraJavaOptions",
-            ("-XX:-DontCompileHugeMethods " + os.environ.get("SYMSPARK_JAVA_OPTS", "")).strip(),
-        )
+        .config("spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         # collect_list groups (one per record) always exceed the 128-entry
         # object-hash-aggregate default, which forces a sort per partition
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
         .config("spark.sql.files.maxPartitionBytes", max_part)
-        .config("spark.ui.enabled", os.environ.get("SYMSPARK_UI", "false"))
+        .config("spark.ui.enabled", "false")
     )
-    # Shuffle/spill codec override (r5 A/B, BASELINE.md): lz4 (Spark's
-    # default) stays shipped — its quiet-window best (45.8s on the 4.8M-turn
-    # workload) beat every zstd run — but zstd level 1 won 4/5 interleaved
-    # pairs on DEGRADED host windows (median 74.5s vs 124.4s): it moves
-    # ~2-3x fewer bytes through the contended memory system, so it degrades
-    # far less.  On noisy/multi-tenant hosts set SYMSPARK_IO_CODEC=zstd.
-    codec = os.environ.get("SYMSPARK_IO_CODEC")
-    if codec:
-        builder = builder.config("spark.io.compression.codec", codec)
-        if codec == "zstd":
-            builder = builder.config("spark.io.compression.zstd.level", "1")
-    if master.startswith("local[") and os.environ.get("SYMSPARK_SHUFFLE_COMPRESS", "1") == "0":
-        # Shuffle compression history on this host: with the round-2 Arrow-
-        # UDF parse engine it was a 2.3x LOSS at 32 threads (the JNI codec
-        # holds GetPrimitiveArrayCritical; combined with the Python workers'
-        # allocation pressure every young GC became "GCLocker Initiated").
-        # With the round-3 JVM-expression engine that pressure is gone and
-        # the trade flips: lz4 sends ~3x fewer bytes through the SHARED
-        # memory system, which is the measured scaling bottleneck at high
-        # thread counts (round-4 A/B on the honest 2.4M-turn workload:
-        # 109.5k turns/s at local[32] compressed vs ~58k uncompressed; -10%
-        # at local[8] where bandwidth is not binding).  Compression is
-        # therefore ON by default — also the cluster default — and
-        # SYMSPARK_SHUFFLE_COMPRESS=0 preserves the uncompressed config for
-        # A/B reruns.
-        builder = (
-            builder.config("spark.shuffle.compress", "false")
-            .config("spark.shuffle.spill.compress", "false")
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

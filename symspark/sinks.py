@@ -14,12 +14,14 @@ Stage 4).
 
 Resumability: the output is partitioned by conv_id hash bucket; ONE
 pipeline pass writes every remaining ``bucket=NNNNN`` partition via
-dynamic partition overwrite, then a manifest JSON per bucket (row counts,
-per-sink counters, lineage) commits via atomic rename.  On restart,
-completed (manifested) buckets are filtered out at the input scan and the
-in-flight ones are re-overwritten — the redo is idempotent, so the
-manifest protocol is exactly-once at the bucket level.  A driver-side
-protocol, deliberately not a Spark concern.
+dynamic partition overwrite, and only after that job a manifest JSON per
+bucket (row counts, per-sink counters, lineage) commits via atomic rename.
+On restart, manifested buckets are filtered out at the input scan and
+every unmanifested one is re-overwritten.  The guarantee is an idempotent
+restart: a committed bucket is never redone and a redo never duplicates
+rows, but a job killed during the write redoes all of its buckets (they
+commit together, after the write).  A driver-side protocol, deliberately
+not a Spark concern.
 
 Layout note: a ``base_path`` holds ONE sink layout — either flat
 ``write_fanout`` output (``sinks/route=…``) or bucketed/streaming output
@@ -36,6 +38,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from symspark.config import DEFAULT_CONFIG, PipelineConfig
+from symspark.pipeline import SINK_COUNTERS, sink_aggregates
 
 DEFAULT_PARTITION_KEYS = ("route", "outcome")
 
@@ -145,11 +148,11 @@ def run_checkpointed(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     input_lineage: str = "",
 ) -> dict:
-    """Process the input in conv_id hash buckets, committing a per-bucket
-    manifest (rows, per-sink counters, lineage) after each bucket-scoped
-    overwrite.  Re-runs skip completed buckets and idempotently redo the
-    in-flight one, so a killed job resumes where it left off without
-    duplicating rows.
+    """Process the input in conv_id hash buckets: one job overwrites every
+    unmanifested bucket, then a per-bucket manifest (rows, per-sink
+    counters, lineage) commits for each.  A re-run skips manifested
+    buckets and redoes the rest without duplicating rows; a job killed
+    before its manifests commit is redone in full (idempotent restart).
 
     Returns a summary dict {buckets_run, buckets_skipped, rows}.
     """
@@ -161,7 +164,7 @@ def run_checkpointed(
     if not todo:
         return {"buckets_run": 0, "buckets_skipped": len(done), "rows": 0}
 
-    bucket_int = F.pmod(F.xxhash64(cfg.conv_id_col), F.lit(n_buckets)).cast("int")
+    bucket_int = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
     # ONE input scan + ONE pipeline DAG for every remaining bucket (the
     # round-2 per-bucket filter loop scanned the fact table n_buckets
@@ -194,22 +197,8 @@ def run_checkpointed(
     per_bucket: dict[int, dict] = {b: {} for b in todo}
     if run_dirs:
         written = spark.read.option("basePath", sinks_root).parquet(*run_dirs)
-        for r in (
-            written.groupBy("bucket", cfg.sink_col)
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.coalesce(F.col("frames_processed"), F.lit(0))).alias("frames_processed"),
-                F.sum(F.coalesce(F.col("frames_failed"), F.lit(0))).alias("frames_failed"),
-                F.sum(F.coalesce(F.col("fetch_failures"), F.lit(0))).alias("fetch_failures"),
-            )
-            .collect()
-        ):
-            per_bucket[int(r["bucket"])][r[cfg.sink_col]] = {
-                "rows": r["rows"],
-                "frames_processed": r["frames_processed"],
-                "frames_failed": r["frames_failed"],
-                "fetch_failures": r["fetch_failures"],
-            }
+        for r in sink_aggregates(written, keys=("bucket",)).collect():
+            per_bucket[int(r["bucket"])][r["sink"]] = {k: r[k] for k in SINK_COUNTERS}
 
     ran, rows_total = 0, 0
     for b in todo:
@@ -242,9 +231,7 @@ def aggregate_manifests(base_path: str) -> dict:
         with open(_manifest_path(base_path, b)) as f:
             m = json.load(f)
         for sink, c in m["sinks"].items():
-            t = totals.setdefault(
-                sink, {"rows": 0, "frames_processed": 0, "frames_failed": 0, "fetch_failures": 0}
-            )
+            t = totals.setdefault(sink, dict.fromkeys(SINK_COUNTERS, 0))
             for k in t:
                 t[k] += c[k]
     return totals

@@ -25,8 +25,6 @@ the streaming analog is:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming import StreamingQuery
 
@@ -34,6 +32,7 @@ from symspark.config import DEFAULT_CONFIG, PipelineConfig
 from symspark.operators import route as route_op
 from symspark.pipeline import Lookups, run_pipeline
 from symspark.schemas import TRANSCRIPTS_SCHEMA
+from symspark.sinks import write_fanout
 
 
 def run_streaming(
@@ -53,13 +52,11 @@ def run_streaming(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        enriched = run_pipeline(batch_df, lookups, cfg)
         # idempotent per-batch write: replay of a batch_id overwrites its
         # own subdirectory instead of blind-appending duplicates
-        (
-            enriched.write.mode("overwrite")
-            .partitionBy("route", "outcome")
-            .parquet(os.path.join(out_dir, "sinks", f"batch={batch_id}"))
+        write_fanout(
+            run_pipeline(batch_df, lookups, cfg), out_dir,
+            mode="overwrite", subdir=f"batch={batch_id}",
         )
 
     writer = (
@@ -84,11 +81,11 @@ def streaming_sink_metrics(
     routed = route_op.gate_and_route(stream, cfg)
     return (
         routed.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col(cfg.route_col))
+        .groupBy(F.window("ts", window).alias("w"), F.col("route"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
             F.col("w.start").alias("window_start"),
-            F.col(cfg.route_col),
+            F.col("route"),
             F.col("n"),
         )
     )
@@ -146,8 +143,6 @@ def streaming_conversation_state(
     The per-batch work is vectorized: the pandas batches are reduced with
     ``len``/``sum``/``min``/``max`` — no per-row Python.
     """
-    route_col = cfg.route_col
-
     def update(key, pdfs, state):
         import pandas as pd
 
@@ -171,7 +166,7 @@ def streaming_conversation_state(
         )
         for pdf in pdfs:
             turns += len(pdf)
-            routed += int((pdf[route_col] != "skip").sum())
+            routed += int((pdf["route"] != "skip").sum())
             ts = pdf["ts"].dropna()
             if len(ts):
                 lo = int(ts.min().value // 1000)
@@ -198,7 +193,7 @@ def streaming_conversation_state(
     stream = reader.parquet(input_dir)
     routed = route_op.gate_and_route(stream, cfg)
     return (
-        routed.select("conv_id", "ts", route_col)
+        routed.select("conv_id", "ts", "route")
         .groupBy("conv_id")
         .applyInPandasWithState(
             update,

@@ -394,17 +394,21 @@ def test_default_plan_has_no_python_eval(spark, fixture_dir, tmp_path):
     spark.sql("DROP TABLE IF EXISTS t_bucketed_plan")
 
 
-def test_prepare_dims_large_store_path(spark, fixture_dir):
-    """localize=False keeps dims distributed with no broadcast hint (the
-    driver-OOM-safe large-store path); the pipeline must produce the same
-    sink aggregates as the localized configuration, and 'auto' must pick
-    localization for the fixture-sized store."""
+def test_prepare_dims_large_store_path(spark, fixture_dir, monkeypatch):
+    """A store over LOCALIZE_MAX_ROWS keeps its dims distributed with no
+    broadcast hint (the driver-OOM-safe large-store path); the pipeline
+    must produce the same sink aggregates as with pinned dims, and the
+    default threshold pins the fixture-sized store."""
     from symspark import pipeline as pl
 
     t = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
     lookups = load_lookups(spark, fixture_dir)
-    small = pl.prepare_dims(lookups, localize=True)
-    large = pl.prepare_dims(lookups, localize=False)
+    small = pl.prepare_dims(lookups)
+    with monkeypatch.context() as m:
+        m.setattr(pl, "LOCALIZE_MAX_ROWS", 0)
+        large = pl.prepare_dims(lookups)
+    plan_large = large.sourcemap[1]._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan_large
     agg_small = {
         r["sink"]: r["rows"]
         for r in pl.sink_aggregates(pl.run_pipeline(t, lookups, dims=small)).collect()
@@ -415,8 +419,7 @@ def test_prepare_dims_large_store_path(spark, fixture_dir):
     }
     assert agg_small == agg_large
 
-    # auto pins the fixture-small dims: the dim plan reads the executor
-    # cache (InMemoryRelation), not the underlying file scan, per action
-    auto = pl.prepare_dims(lookups, localize="auto")
-    plan = auto.sourcemap[1]._jdf.queryExecution().optimizedPlan().toString()
+    # the default pins the fixture-small dims: the dim plan reads the
+    # executor cache (InMemoryRelation), not the underlying file scan
+    plan = small.sourcemap[1]._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" in plan

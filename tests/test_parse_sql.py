@@ -254,16 +254,15 @@ def _mismatches(df, key) -> tuple[int, list]:
     """Parse the raw-text rows of ``df`` with the JVM engine and with the
     scalar oracle run as a Python UDF over the same rows; returns the row
     count and the (key, jvm, oracle) triples that differ."""
-    cfg = PipelineConfig()
-    mk = cfg.metrickit_stack_trace_col
-    out = frames_op.attach_parsed(df, cfg).where(
-        F.col(cfg.route_col).isin("js", "jvm", "apple", "mk")
+    mk = "metrickit_stacktrace_json"
+    out = frames_op.attach_parsed(df, PipelineConfig()).where(
+        F.col("route").isin("js", "jvm", "apple", "mk")
     )
-    route, text = F.col(cfg.route_col), F.col("text")
+    route, text = F.col("route"), F.col("text")
     if mk in df.columns:
         text = F.when(route == "mk", F.coalesce(F.col(mk), text)).otherwise(text)
     udf = F.udf(lambda *record: P.parse_record(*record), PARSED_SCHEMA)(
-        route, text, cfg.exception_type_col, cfg.exception_message_col
+        route, text, "exception_type", "exception_message"
     )
     rows = out.select(key, "parsed", udf.alias("want")).collect()
     as_dict = [(r[0], r[1] and r[1].asDict(True), r[2] and r[2].asDict(True)) for r in rows]

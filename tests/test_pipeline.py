@@ -499,3 +499,22 @@ def test_sink_aggregates_shape(spark, fixture_dir, results):
     assert rows["skip"]["rows"] == 3
     assert rows["js/ok"]["rows"] == 2  # js1, js2
     assert rows["js/failed"]["frames_failed"] >= 2
+
+
+@pytest.mark.parametrize(
+    "change, column",
+    [
+        (lambda t: t.withColumnRenamed("conv_id", "conversation_id"), "conv_id"),
+        (lambda t: t.drop("proguard_uuid"), "proguard_uuid"),
+    ],
+    ids=["conv_id_renamed", "proguard_uuid_dropped"],
+)
+def test_off_schema_input_fails_at_plan_build(spark, fixture_dir, change, column):
+    """Column names are the TRANSCRIPTS_SCHEMA contract: an input that
+    renames or lacks one fails while the plan is built, naming the column,
+    before any row is computed."""
+    from pyspark.errors import AnalysisException
+
+    t = change(spark.read.parquet(f"{fixture_dir}/transcripts.parquet"))
+    with pytest.raises(AnalysisException, match=column):
+        run_pipeline(t, load_lookups_cached(spark, fixture_dir))

@@ -180,3 +180,17 @@ def test_ann_lsh_topk_radius_guard(spark):
 
     with _pytest.raises(ValueError):
         Q._ann_lsh_topk_impl(spark, SF_DIR, n_planes=4, radius=2)
+
+
+def test_sf_turns_sizing():
+    """Transcript sizing is 6M x SF for any sf<number> dir and raises on
+    any other name, instead of silently falling back to 6,000 turns."""
+    from symspark.plans import queries as Q
+
+    assert Q.sf_turns("sf1.0") == 6_000_000
+    assert Q.sf_turns("sf0.001") == 6_000
+    assert Q.sf_turns("sf0.01") == 60_000
+    assert Q.sf_turns("sf0.1") == 600_000
+    for bad in ("foo", "sf", "sf0", "sf-1", "sf1e3"):
+        with pytest.raises(ValueError):
+            Q.sf_turns(bad)
