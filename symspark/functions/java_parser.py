@@ -19,8 +19,13 @@ ERR_EMPTY = "stack trace is empty"
 ERR_INVALID = "invalid stack trace format"
 ERR_NO_FRAMES = "no valid stack frames found in stack trace"
 
-_RE_HEADER = re.compile(r"^([^\s:]+)\s*:\s*(.*)$")
-_RE_FRAME = re.compile(r"^\s*at\s+([^\s(]+)\.([^\s.(]+)\(([^:)]+)(?::(-?\d+))?\)\s*$")
+# re.ASCII: `\s`/`\d` are ASCII, as in Go RE2 and the JVM engine
+_RE_HEADER = re.compile(r"^([^\s:]+)\s*:\s*(.*)$", re.ASCII)
+_RE_FRAME = re.compile(
+    r"^\s*at\s+([^\s(]+)\.([^\s.(]+)\(([^:)]+)(?::(-?\d+))?\)\s*$", re.ASCII
+)
+# the ASCII `\s` set, for trimming (str.strip() also strips Unicode spaces)
+_WS = " \t\n\r\f\v"
 
 
 def parse_java_frame(line: str) -> dict | None:
@@ -50,13 +55,13 @@ def parse_java_stack_trace(text: str) -> tuple[dict | None, str | None]:
     if not text:
         return None, ERR_EMPTY
     lines = text.split("\n")
-    first = lines[0].strip()
+    first = lines[0].strip(_WS)
     m = _RE_HEADER.search(first) if first else None
     if not m:
         return None, ERR_INVALID
     elements: list[dict] = []
     for line in lines[1:]:
-        if not line.strip():
+        if not line.strip(_WS):
             continue
         frame = parse_java_frame(line)
         elements.append({"frame": frame} if frame else {"raw": line})

@@ -25,39 +25,41 @@ from symspark.functions.limits import line_ok
 UNKNOWN_FUNCTION = "?"
 
 # Strategy regexes (stack_trace_parser.go:20-46).  Go RE2 and Python `re`
-# agree on leftmost-first capture semantics for these patterns; `(?i)` ports
-# directly, and no backreferences are used.
+# agree on leftmost-first capture semantics for these patterns, and no
+# backreferences are used.  re.ASCII makes `\s`/`\d` ASCII as in RE2 and
+# the JVM engine; `(?i)` folds ASCII only, as in the JVM engine (RE2 folds
+# Unicode: README "Known deviations").
 _RE_REACT_NATIVE = re.compile(
-    r"^\s*at (.*?) ?\(address at (.+?)(?::(\d+))?(?::(\d+))?\)\s*$", re.I
+    r"^\s*at (.*?) ?\(address at (.+?)(?::(\d+))?(?::(\d+))?\)\s*$", re.I | re.ASCII
 )
 _RE_CHROME = re.compile(
     r"^\s*at (.*?) ?\(((?:file|https?|blob|chrome-extension|native|eval|webpack|<anonymous>|\/).*?)(?::(\d+))?(?::(\d+))?\)?\s*$",
-    re.I,
+    re.I | re.ASCII,
 )
 _RE_GECKO = re.compile(
     r"^\s*(.*?)(?:\((.*?)\))?(?:^|@)((?:file|https?|blob|chrome|webpack|resource|\[native).*?|[^@]*bundle)(?::(\d+))?(?::(\d+))?\s*$",
-    re.I,
+    re.I | re.ASCII,
 )
 _RE_WINJS = re.compile(
     r"^\s*at (?:((?:\[object object\])?.+) )?\(?((?:file|ms-appx|https?|webpack|blob):.*?):(\d+)(?::(\d+))?\)?\s*$",
-    re.I,
+    re.I | re.ASCII,
 )
-_RE_GECKO_EVAL = re.compile(r"(\S+) line (\d+)(?: > eval line \d+)* > eval", re.I)
-_RE_CHROME_EVAL = re.compile(r"\((\S*)(?::(\d+))(?::(\d+))\)")  # intentionally no /i
-_RE_OPERA11 = re.compile(r" line (\d+).*script (?:in )?(\S+)(?:: in function (\S+))?$", re.I)
+_RE_GECKO_EVAL = re.compile(r"(\S+) line (\d+)(?: > eval line \d+)* > eval", re.I | re.ASCII)
+_RE_CHROME_EVAL = re.compile(r"\((\S*)(?::(\d+))(?::(\d+))\)", re.ASCII)  # intentionally no /i
+_RE_OPERA11 = re.compile(r" line (\d+).*script (?:in )?(\S+)(?:: in function (\S+))?$", re.I | re.ASCII)
 _RE_OPERA11_COL = re.compile(
     r" line (\d+), column (\d+)\s*(?:in (?:<anonymous function: ([^>]+)>|([^\)]+))\((.*)\))? in (.*):\s*$",
-    re.I,
+    re.I | re.ASCII,
 )
 _RE_OPERA9_LINKED = re.compile(
     r"^\s*Line (\d+) of linked script ((?:file|https?|blob)\S+)(?:: in function (\S+))?\s*$",
-    re.I,
+    re.I | re.ASCII,
 )
 _RE_OPERA9_INLINE = re.compile(
     r"^\s*Line (\d+) of inline#(\d+) script in ((?:file|https?|blob)\S+)(?:: in function (\S+))?\s*$",
-    re.I,
+    re.I | re.ASCII,
 )
-_RE_OPERA9_FUNC = re.compile(r"^\s*Line (\d+) of function script\s*$", re.I)
+_RE_OPERA9_FUNC = re.compile(r"^\s*Line (\d+) of function script\s*$", re.I | re.ASCII)
 
 
 def _to_int(s: str | None) -> int | None:

@@ -33,10 +33,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _spread(df: DataFrame) -> DataFrame:
-    """Parallelism guard for expensive per-row projections (guide §2.5/§6):
-    a few-MB fixture parquet scans into only 1-2 input splits, so an
-    interpreted HOF / md5-vote projection placed directly above the scan
-    runs on 1-2 of the session's cores (measured: the 4-plane bucket
+    """Parallelism guard for expensive per-row projections (guide §2.5/§6).
+    Spark sizes scan splits as ``min(maxPartitionBytes, max(openCost,
+    totalBytes / defaultParallelism))``, which gives a small multi-file
+    table about one split per core; but a split is never smaller than
+    ``openCost`` (4 MB) and a parquet row group is never divided, so a
+    few-MB single-file catalog table scans into only 1-2 input splits and
+    an interpreted HOF / md5-vote projection placed directly above the
+    scan runs on 1-2 of the session's cores (measured: the 4-plane bucket
     projection at sf1.0 took 0.67s on the 2-split embeddings scan, ~0.1s
     spread).  Round-robin repartition to the session's parallelism ONLY
     when the scan is narrower than that — at real scale the scan already

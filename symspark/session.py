@@ -7,6 +7,39 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _mem_total_gb() -> int:
+    """Physical memory in whole GiB (``MemTotal`` of /proc/meminfo); 0
+    where that file is missing or unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // (1024 * 1024)
+    except OSError:
+        pass
+    return 0
+
+
+def default_driver_mem(master: str) -> str:
+    """Driver heap when ``SYMSPARK_DRIVER_MEM`` is unset.
+
+    In local mode the driver heap is the only memory knob; size it to the
+    thread count or concurrent tasks GC-thrash (observed: 32 threads in an
+    8g heap spent 28% of run time in GC and amplified work ~20x).  Capped
+    at 24g: G1 young pauses on this class of host scale with heap
+    (observed: 70g heap -> 611ms avg young pause, 114s GC per bench run;
+    24g -> 10-40ms pauses, ~5s GC) and the pipeline's live set is ~10g.
+    Also capped at half the physical memory, so the heap never claims a
+    small host.
+    """
+    n_threads = 32
+    if master.startswith("local[") and master[6:-1].isdigit():
+        n_threads = int(master[6:-1])
+    total = _mem_total_gb()
+    cap = min(24, max(1, total // 2)) if total else 24
+    return f"{min(cap, 6 + 2 * n_threads)}g"
+
+
 def get_spark(
     app_name: str = "symspark",
     master: str | None = None,
@@ -22,8 +55,12 @@ def get_spark(
     Three deployment settings come from the environment:
     ``SPARK_GRAFT_MASTER`` (master when none is passed),
     ``SPARK_GRAFT_CPUS`` (local thread count and shuffle partitions) and
-    ``SYMSPARK_DRIVER_MEM`` (driver heap).  Any other Spark conf goes in
-    ``extra_conf``, applied last.
+    ``SYMSPARK_DRIVER_MEM`` (driver heap, default ``default_driver_mem``).
+    Scan splits follow Spark's own rule, ``min(maxPartitionBytes,
+    max(openCost, totalBytes / defaultParallelism))`` with each file
+    counted at its size plus ``openCost``: a small table gets about one
+    split per core, a large one 128 MB splits.  Any other Spark conf
+    goes in ``extra_conf``, applied last.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     cores = os.environ.get("SPARK_GRAFT_CPUS")
@@ -32,24 +69,6 @@ def get_spark(
     if shuffle_partitions is None:
         n = cores or os.cpu_count() or 8
         shuffle_partitions = int(n)
-    # local mode: the driver heap is the only memory knob; size it to the
-    # thread count or concurrent tasks GC-thrash (observed: 32 threads in an
-    # 8g heap spent 28% of run time in GC and amplified work ~20x)
-    n_threads = 32
-    if master.startswith("local[") and master[6:-1].isdigit():
-        n_threads = int(master[6:-1])
-    # capped at 24g: G1 young pauses on this class of host scale with heap
-    # (observed: 70g heap -> 611ms avg young pause, 114s GC per bench run;
-    # 24g -> 10-40ms pauses, ~5s GC) and the pipeline's live set is ~10g
-    default_mem = f"{min(24, 6 + 2 * n_threads)}g"
-    # Scan split sizing: the cluster default (128m bins + 4m file-open
-    # cost) packs a small-fixture multi-file table into ~2 input
-    # partitions, serializing the whole scan->parse->join mega-stage no
-    # matter how many cores exist (the round-2 scaling-floor bug).  In
-    # local mode use 4m bins so each fixture shard is its own partition
-    # and all cores engage; a cluster master keeps the production value,
-    # where 100TB inputs dwarf any sane bin size.
-    max_part = "4m" if master.startswith("local[") else "128m"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -65,14 +84,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SYMSPARK_DRIVER_MEM", default_mem))
+        .config("spark.driver.memory",
+                os.environ.get("SYMSPARK_DRIVER_MEM", default_driver_mem(master)))
         # the fused explode-stage consume method lands just over HotSpot's
         # 8KB JIT ceiling; without this flag it runs interpreted (~10x cost).
         .config("spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods")
         # collect_list groups (one per record) always exceed the 128-entry
         # object-hash-aggregate default, which forces a sort per partition
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-        .config("spark.sql.files.maxPartitionBytes", max_part)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

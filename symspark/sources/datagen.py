@@ -618,9 +618,11 @@ def write_all(
 ) -> dict[str, str]:
     """Write transcripts + lookup tables as parquet; skip if already present.
 
-    The transcript table is sharded into ``n_shards`` files (a directory,
-    like any real table) so Spark's scan — and therefore the parse stage —
-    parallelizes across cores regardless of file-split thresholds.
+    The transcript table is sharded into ``n_shards`` files, a directory
+    like any real table, so the scan is a multi-file scan.  The shard count
+    does not set the scan's parallelism: Spark packs small files into
+    splits of about ``totalBytes / defaultParallelism`` (session.py), so a
+    small table scans in about one split per core whatever its file count.
     """
     os.makedirs(outdir, exist_ok=True)
     paths = {}

@@ -104,6 +104,13 @@ JS_CASES = [
     ("e", "m", "    at fo\x01o (http://x/a.js:1:2)\n    at ok (http://x/b.js:3:4)"),
     ("e", "m", "f\x02n@http://x/a.js:10:5"),
     ("e", "m", " line 1 script " + "s" * 9000 + "\n\n called from line 2 script http://x/y.js"),
+    # non-ASCII: `\d`, `\s` and `(?i)` are ASCII in both engines (an
+    # Arabic-Indic digit, a no-break space, the Kelvin sign for `k`)
+    ("e", "m", "    at f (http://x/a.js:\u0663:4)\n    at g (http://x/b.js:3:\u0664)"),
+    ("e", "m", "\u00a0   at f (http://x/a.js:1:2)\n    at\u00a0g (http://x/b.js:3:4)"),
+    ("e", "m", "x@webpac\u212a:///src/a.js:1:2\ny@http://x/b.js:\u0663"),
+    ("e", "m", "  Line \u0663 of linked script http://o.example/t.js\n    f();\n"
+     "  Line 4 of linked script http://o.example/u.js\u00a0\n    g();"),
 ]
 
 JVM_CASES = [
@@ -121,6 +128,9 @@ JVM_CASES = [
     "java.lang.E: x\r\n\tat a.a.a(F.java:1)\r",
     "java.lang.E: x\n\tat a." + "b" * 9000 + ".c(F.java:1)\n\tat a.a.a(F.java:2)",
     "java.lang.E: x\n\tat a.b\x01.c(F.java:1)\n\tat q\x02.w.e(G.java:2)",
+    # non-ASCII digit and no-break spaces: not `\d` / `\s` in either engine
+    "java.lang.E: x\n\tat a.a.a(F.java:\u0663)\n\u00a0at a.b.c(G.java:2)\n\u00a0\n\tat b.b.b(H.java:3)",
+    "\u00a0java.lang.E:\u00a0x\n\tat a.a.a(F.java:1)",
 ]
 
 APPLE_CASES = [
