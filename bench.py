@@ -115,7 +115,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     # parallel scaling at small fixture sizes); both parallelism levels see
     # the SAME replicated input.  Replication is a hardlinked file set, so
     # the plan stays ONE scan relation (a unionAll would clone the whole
-    # operator tree repl times - repl x parse stages, repl x 6 broadcasts)
+    # operator tree repl times - repl x parse stages, repl x 7 broadcasts)
     repl = int(os.environ.get("SYMSPARK_BENCH_REPLICATE", "1"))
     src = os.path.join(tdir, "transcripts.parquet")
     if repl > 1:

@@ -55,11 +55,6 @@ STATUS_PROCESSOR_FAILED = "processor-parser-failed"
 STATUS_ALL_FAILED = "all-parsing-failed"
 STATUS_NOT_APPLICABLE = "not_applicable"
 
-# backwards-compatible aliases (round-1 names)
-STATUS_BOTH_MATCH = STATUS_CONSISTENT
-STATUS_MISMATCH = STATUS_DIFFERENT
-STATUS_PARSER_FAILED = STATUS_PROCESSOR_FAILED
-
 _TIMED_SCHEMA = T.StructType(
     [
         T.StructField("parsed", PARSED_SCHEMA, True),

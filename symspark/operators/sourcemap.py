@@ -113,8 +113,9 @@ def enrich_js(
 ) -> DataFrame:
     """Broadcast-join enrichment for ``kind == 'js'`` frames; adds the
     ``js_out`` outcome-struct column (null for other kinds).  Pass ``dims``
-    (from build_sourcemap_dims, possibly localized via
-    pipeline.prepare_dims) to skip per-action dim aggregation."""
+    (build_sourcemap_dims's output as pipeline.prepare_dims returns it:
+    small dims local relations, large ones distributed) to skip
+    per-action dim aggregation."""
     if dims is None:
         # inline-built dims are fixture-small: hint broadcast; pre-built
         # dims carry their own hint decision (pipeline.prepare_dims gates

@@ -63,34 +63,17 @@ def load_lookups(spark: SparkSession, directory: str) -> Lookups:
 
 @dataclass
 class PreparedDims:
-    """Pre-aggregated (and optionally cache-pinned) dimension tables.
+    """Pre-aggregated dimension tables, each carrying its join decision.
 
-    The symbol dims are tiny relative to the fact table; pinning them to
-    the executor cache removes all per-action dim-prep work so a repeated
-    pipeline run spends its time on the fact scan only (what a real
-    deployment gets from building dims once and reusing the broadcast
-    across a long-running job)."""
+    The symbol dims are tiny relative to the fact table; a small dim is
+    held as a driver-side local relation, so a repeated pipeline run spends
+    its time on the fact scan only (what a real deployment gets from
+    building dims once and reusing the broadcast across a long-running
+    job)."""
 
     sourcemap: tuple[DataFrame, DataFrame, DataFrame]
     proguard: tuple[DataFrame, DataFrame]
     dsym: tuple[DataFrame, DataFrame]
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Materialize a small dim once as a single-partition cached JVM
-    DataFrame.  NOT a driver `createDataFrame(collect())` localization:
-    that builds a python-RDD-backed plan, so every subsequent action
-    re-runs the broadcast build as N python-runner tasks - with 6 dims
-    per pipeline that is a ~200-process Python fork storm PER ACTION
-    (the round-2 bench stall).  A cached coalesce(1) keeps the rebuild
-    JVM-only and one task."""
-    pinned = df.coalesce(1)
-    # skip the persist when an equivalent plan is already cached (repeated
-    # prepare_dims calls otherwise log a CacheManager warning per action)
-    if not pinned.storageLevel.useMemory:
-        pinned = pinned.persist()
-    pinned.count()
-    return pinned
 
 
 # dims at or under this row count are driver-localized + broadcast-hinted;
@@ -101,130 +84,33 @@ LOCALIZE_MAX_ROWS = 200_000
 
 def prepare_dims(lookups: Lookups) -> PreparedDims:
     """Pre-aggregate the symbol dims and decide their join strategy by row
-    count.  Small dims (the common case - a symbol store is tiny next to
-    the fact table) are materialized once into the executor cache (single
-    partition, JVM-only rebuilds) and get an explicit broadcast hint, so
-    repeated pipeline actions pay one cheap cache read per broadcast.  A
-    dim over LOCALIZE_MAX_ROWS stays an unpinned distributed DataFrame
-    with NO broadcast hint - the enrichment join is then planned by AQE
-    (this is the large-store path).
+    count, with one bounded action per dim.  Small dims (the common case -
+    a symbol store is tiny next to the fact table) are collected to the
+    driver as Arrow and rebuilt as a broadcast-hinted ``LocalRelation``:
+    JVM-only data, no Python RDD and nothing in the session cache, so a
+    repeated pipeline action rebuilds its broadcasts from driver memory.
+    A dim over LOCALIZE_MAX_ROWS stays a distributed DataFrame with NO
+    broadcast hint - the enrichment join is then planned by AQE (this is
+    the large-store path).  A small dim whose Arrow bytes exceed
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default) is planned as a ``LogicalRDD`` scan over a JVM
+    ``ParallelCollectionRDD`` of Arrow batches instead: no Python RDD
+    either, and still nothing cached.
     """
     sm = sourcemap.build_sourcemap_dims(lookups.sourcemap_tokens, lookups.sourcemap_store)
     pg = proguard.build_proguard_dims(lookups.proguard_mapping, lookups.proguard_store)
     ds = dsym.build_dsym_dims(lookups.dsym_symbols, lookups.dsym_store)
 
     def prep(d: DataFrame) -> DataFrame:
-        if d.limit(LOCALIZE_MAX_ROWS + 1).count() <= LOCALIZE_MAX_ROWS:
-            return F.broadcast(_pin(d))
+        t = d.limit(LOCALIZE_MAX_ROWS + 1).toArrow()
+        if t.num_rows <= LOCALIZE_MAX_ROWS:
+            return F.broadcast(d.sparkSession.createDataFrame(t, d.schema))
         return d
 
     sm = tuple(prep(d) for d in sm)
     pg = tuple(prep(d) for d in pg)
     ds = tuple(prep(d) for d in ds)
     return PreparedDims(sourcemap=sm, proguard=pg, dsym=ds)
-
-
-# equi-join key columns of each pre-aggregated dim (the bucketing keys for
-# the large-store path; SURVEY.md §4 item 2)
-_DIM_BUCKET_KEYS = {
-    "sm_toks": ("sm_url_base", "sm_uuid"),
-    "sm_summary": ("smu_url_base", "smu_uuid"),
-    "sm_store": ("sms_url_base", "sms_uuid"),
-    "pg_ranges": ("pg_uuid", "pg_cls", "pg_method"),
-    "pg_store": ("pgs_uuid",),
-    "ds_ranges": ("ds_uuid", "ds_bin"),
-    "ds_store": ("dss_uuid", "dss_bin"),
-}
-
-
-def iceberg_dim_partition_spec(name: str, n_buckets: int) -> list:
-    """Partition transforms for a bucketed dim written as an Iceberg table.
-
-    Iceberg's ``bucket`` transform is SINGLE-column (multi-arg bucket is not
-    in the Iceberg partition spec), so unlike the parquet ``bucketBy``
-    branch — which hashes the full compound join key — the Iceberg layout
-    buckets on the LEADING join key only (the most selective one: the
-    artifact uuid / url_base that every enrichment lookup is scoped by).
-    The remaining key columns still prune via Iceberg's file-level min/max
-    stats because the write sorts by the full key set.  The two branches
-    therefore differ in layout; the shuffle-free co-located equi-join
-    guarantee is only compound-key-complete on the parquet branch.
-    """
-    keys = _DIM_BUCKET_KEYS[name]
-    return [F.bucket(n_buckets, F.col(keys[0]))]
-
-
-def prepare_dims_bucketed(
-    spark: SparkSession,
-    lookups: Lookups,
-    n_buckets: int = 32,
-    prefix: str = "symspark_dim",
-    path: str | None = None,
-) -> PreparedDims:
-    """The LARGE-store join path: materialize each pre-aggregated dim as a
-    table bucketed on its equi-join keys, so enrichment joins read the dim
-    pre-partitioned — no dim-side shuffle per run, no broadcast build of a
-    store that doesn't fit one executor.  A genuinely huge symbol store is
-    written once and joined many times; only the fact side exchanges.
-
-    Writer: Iceberg ``bucket(n, key)`` transform when the runtime has the
-    iceberg jar (metadata survives across engines/sessions); otherwise
-    Spark-native bucketed parquet tables (``bucketBy``/``sortBy``/
-    ``saveAsTable`` — bucket metadata lives in the session catalog, which
-    covers the long-running-job deployment this path exists for).
-
-    ``path`` roots the table data (external tables); default is the
-    session warehouse dir.
-    """
-    from symspark import sinks as sinks_mod
-
-    sm = sourcemap.build_sourcemap_dims(lookups.sourcemap_tokens, lookups.sourcemap_store)
-    pg = proguard.build_proguard_dims(lookups.proguard_mapping, lookups.proguard_store)
-    ds = dsym.build_dsym_dims(lookups.dsym_symbols, lookups.dsym_store)
-    # build_sourcemap_dims returns (toks_by_line, store_dim, summary)
-    named = dict(
-        zip(("sm_toks", "sm_store", "sm_summary"), sm)
-    ) | dict(zip(("pg_ranges", "pg_store"), pg)) | dict(zip(("ds_ranges", "ds_store"), ds))
-
-    use_iceberg = sinks_mod.iceberg_available(spark)
-    out: dict[str, DataFrame] = {}
-    for name, df in named.items():
-        keys = _DIM_BUCKET_KEYS[name]
-        table = f"{prefix}_{name}"
-        if use_iceberg:
-            # full-key pruning relies on per-file column stats, so the data
-            # actually written must be sorted by the complete join key —
-            # an ALTER ... WRITE ORDERED BY issued after createOrReplace()
-            # only governs FUTURE writes, not the one that just happened
-            # (see iceberg_dim_partition_spec).  Sort the frame itself, and
-            # ALSO record the sort order in table metadata for appends.
-            (
-                df.sort(*keys)
-                .writeTo(table)
-                .using("iceberg")
-                .partitionedBy(*iceberg_dim_partition_spec(name, n_buckets))
-                .createOrReplace()
-            )
-            spark.sql(
-                f"ALTER TABLE {table} WRITE ORDERED BY ({', '.join(keys)})"
-            )
-        else:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-            writer = (
-                df.write.mode("overwrite")
-                .bucketBy(n_buckets, *keys)
-                .sortBy(*keys)
-                .format("parquet")
-            )
-            if path:
-                writer = writer.option("path", os.path.join(path, table))
-            writer.saveAsTable(table)
-        out[name] = spark.table(table)
-    return PreparedDims(
-        sourcemap=(out["sm_toks"], out["sm_store"], out["sm_summary"]),
-        proguard=(out["pg_ranges"], out["pg_store"]),
-        dsym=(out["ds_ranges"], out["ds_store"]),
-    )
 
 
 def run_pipeline(
@@ -237,7 +123,7 @@ def run_pipeline(
     stable under (conv_id, turn_idx) ordering).
 
     Linear physical plan: scan -> route exprs -> JVM parse exprs (no
-    Python worker) -> outer-explode (payload rides along) -> six broadcast
+    Python worker) -> outer-explode (payload rides along) -> seven broadcast
     hash joins -> outcome exprs -> ONE exchange (the regroup) -> record
     assembly exprs.
     """

@@ -83,8 +83,8 @@ def _persist(df: DataFrame, owner: str) -> DataFrame:
         release_caches()
         _PERSIST_OWNER[0] = owner
     # an equivalent plan may already sit in the cache (builders share
-    # intermediates, and other owners — e.g. pipeline._pin — cache their
-    # own frames); re-persisting logs a CacheManager warning per action and
+    # intermediates, and callers outside the catalog may cache their own
+    # frames); re-persisting logs a CacheManager warning per action and
     # masks real cache bugs.  Any storage level counts as "already cached"
     # (useMemory alone misses DISK_ONLY), and only a cache WE created here
     # is registered for release — unpersisting someone else's still-in-use

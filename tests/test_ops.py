@@ -70,40 +70,6 @@ def test_checkpointed_run_resumes(spark, fixture_dir, tmp_path, monkeypatch):
     )
 
 
-def test_bucketed_dim_join_path(spark, fixture_dir, tmp_path):
-    """SURVEY §4 item 2 large-store path: dims materialized as tables
-    bucketed on their join keys; with broadcast disabled (emulating a store
-    too big to broadcast) the enrichment joins must read the bucketed scans
-    (no BroadcastHashJoin, bucketed file scans) and produce the same
-    aggregates as the broadcast path."""
-    import symspark.pipeline as pl
-
-    t = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
-    lookups = load_lookups(spark, fixture_dir)
-    dims = pl.prepare_dims_bucketed(
-        spark, lookups, n_buckets=4, prefix="tdim", path=str(tmp_path / "dims")
-    )
-    baseline = [
-        tuple(r) for r in sink_aggregates(run_pipeline(t, lookups)).collect()
-    ]
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = run_pipeline(t, lookups, dims=dims)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan, "dim scans are not bucketed"
-        assert "BroadcastHashJoin" not in plan
-        assert [tuple(r) for r in sink_aggregates(out).collect()] == baseline
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        for name in (
-            "sm_toks", "sm_store", "sm_summary", "pg_ranges", "pg_store",
-            "ds_ranges", "ds_store",
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS tdim_{name}")
-
-
 def test_iceberg_fanout_or_documented_fallback(spark, enriched):
     """In-sandbox the iceberg-spark-runtime jar is absent -> the writer
     must report that honestly; with the jar present the same call writes a
@@ -117,26 +83,13 @@ def test_iceberg_fanout_or_documented_fallback(spark, enriched):
 
 
 def test_iceberg_partition_specs_construct_without_jar(spark):
-    """The Iceberg code paths cannot execute in-sandbox (jar absent), but
-    their partition specs must at least CONSTRUCT and carry the promised
-    transforms — bucket(32, conv_id) on the fan-out table, bucket(n,
-    <leading join key>) on each bucketed dim (pipeline.py documents why
-    Iceberg bucketing is single-key there)."""
-    import symspark.pipeline as pl
-
+    """The Iceberg fan-out cannot execute in-sandbox (jar absent), but its
+    partition spec must at least CONSTRUCT and carry the promised
+    transforms: bucket(32, conv_id), route and outcome."""
     spec = sinks.iceberg_fanout_partition_spec()
     reprs = [str(c) for c in spec]
     assert any("bucket(32, conv_id)" in r for r in reprs), reprs
     assert any("route" in r for r in reprs) and any("outcome" in r for r in reprs)
-
-    leading = {
-        "sm_toks": "sm_url_base", "sm_summary": "smu_url_base",
-        "sm_store": "sms_url_base", "pg_ranges": "pg_uuid",
-        "pg_store": "pgs_uuid", "ds_ranges": "ds_uuid", "ds_store": "dss_uuid",
-    }
-    for name, key in leading.items():
-        [c] = pl.iceberg_dim_partition_spec(name, 32)
-        assert f"bucket(32, {key})" in str(c), (name, str(c))
 
 
 def test_conversation_rollup_matches_plain_agg(enriched):
@@ -394,32 +347,111 @@ def test_default_plan_has_no_python_eval(spark, fixture_dir, tmp_path):
     spark.sql("DROP TABLE IF EXISTS t_bucketed_plan")
 
 
-def test_prepare_dims_large_store_path(spark, fixture_dir, monkeypatch):
+def _all_dims(dims):
+    return (*dims.sourcemap, *dims.proguard, *dims.dsym)
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _aggs(df):
+    return [tuple(r) for r in sink_aggregates(df).collect()]
+
+
+def test_prepare_dims_large_store_path(spark, fixture_dir, monkeypatch, enriched):
     """A store over LOCALIZE_MAX_ROWS keeps its dims distributed with no
-    broadcast hint (the driver-OOM-safe large-store path); the pipeline
-    must produce the same sink aggregates as with pinned dims, and the
-    default threshold pins the fixture-sized store."""
+    broadcast hint (the driver-OOM-safe large-store path).  With broadcast
+    also off (a store too big for one executor), the enrichment joins are
+    shuffled, and the sink aggregates equal the inline run's.  The default
+    threshold localizes the fixture-sized store."""
+    from symspark import pipeline as pl
+
+    # the large-store plan is the inline plan minus its broadcast hints, so
+    # the module's cached run would answer it from the cache: drop that
+    # cache here so the joins are planned and executed
+    enriched.unpersist(blocking=True)
+    t = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    lookups = load_lookups(spark, fixture_dir)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        baseline = _aggs(run_pipeline(t, lookups))
+        small = pl.prepare_dims(lookups)
+        with monkeypatch.context() as m:
+            m.setattr(pl, "LOCALIZE_MAX_ROWS", 0)
+            large = pl.prepare_dims(lookups)
+        for d in _all_dims(large):
+            plan = _optimized(d)
+            assert "LocalRelation" not in plan and "InMemoryRelation" not in plan, plan
+        assert _aggs(run_pipeline(t, lookups, dims=small)) == baseline
+        assert _aggs(run_pipeline(t, lookups, dims=large)) == baseline
+
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        out = run_pipeline(t, lookups, dims=large)
+        plan = _executed(out)
+        assert "BroadcastHashJoin" not in plan and "InMemoryRelation" not in plan
+        assert _aggs(out) == baseline
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        enriched.persist()
+
+    # the default localizes the fixture-small dims: each dim plan is a
+    # driver-side LocalRelation, neither a cache read nor a file scan
+    for d in _all_dims(small):
+        plan = _optimized(d)
+        assert plan.startswith("LocalRelation") and "InMemoryRelation" not in plan, plan
+
+
+def test_prepare_dims_leaves_session_cache_alone(spark, fixture_dir):
+    """prepare_dims caches nothing: the session's persistent RDDs are the
+    same before and after it, no returned dim has a storage level, and
+    every small dim is a LocalRelation."""
+    from symspark import pipeline as pl
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    dims = pl.prepare_dims(load_lookups(spark, fixture_dir))
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
+    for d in _all_dims(dims):
+        assert not (d.storageLevel.useMemory or d.storageLevel.useDisk)
+        assert _optimized(d).startswith("LocalRelation"), _optimized(d)
+
+
+def test_prepare_dims_all_empty_stores(spark, fixture_dir):
+    """With all six symbol stores empty, every dim is an empty
+    LocalRelation, and the prepared and inline dims give equal rows and
+    sink aggregates."""
+    from symspark import pipeline as pl
+
+    t = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    full = load_lookups(spark, fixture_dir)
+    empty = pl.Lookups(**{k: v.where(F.lit(False)) for k, v in vars(full).items()})
+    dims = pl.prepare_dims(empty)
+    for d in _all_dims(dims):
+        assert _optimized(d).startswith("LocalRelation <empty>"), _optimized(d)
+
+    inline = run_pipeline(t, empty)
+    prepared = run_pipeline(t, empty, dims=dims)
+    order = ["conv_id", "turn_idx"]
+    assert prepared.orderBy(order).collect() == inline.orderBy(order).collect()
+    assert _aggs(prepared) == _aggs(inline)
+
+
+def test_prepared_dims_plan_shape(spark, fixture_dir):
+    """run_pipeline over prepare_dims dims on the fixture: 7 broadcast hash
+    joins (3 source-map, 2 ProGuard, 2 dSYM dims), no sort-merge join, no
+    Python-eval node, and one shuffle exchange, the conv_id regroup."""
     from symspark import pipeline as pl
 
     t = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
     lookups = load_lookups(spark, fixture_dir)
-    small = pl.prepare_dims(lookups)
-    with monkeypatch.context() as m:
-        m.setattr(pl, "LOCALIZE_MAX_ROWS", 0)
-        large = pl.prepare_dims(lookups)
-    plan_large = large.sourcemap[1]._jdf.queryExecution().optimizedPlan().toString()
-    assert "InMemoryRelation" not in plan_large
-    agg_small = {
-        r["sink"]: r["rows"]
-        for r in pl.sink_aggregates(pl.run_pipeline(t, lookups, dims=small)).collect()
-    }
-    agg_large = {
-        r["sink"]: r["rows"]
-        for r in pl.sink_aggregates(pl.run_pipeline(t, lookups, dims=large)).collect()
-    }
-    assert agg_small == agg_large
-
-    # the default pins the fixture-small dims: the dim plan reads the
-    # executor cache (InMemoryRelation), not the underlying file scan
-    plan = small.sourcemap[1]._jdf.queryExecution().optimizedPlan().toString()
-    assert "InMemoryRelation" in plan
+    plan = _executed(run_pipeline(t, lookups, dims=pl.prepare_dims(lookups)))
+    assert plan.count("BroadcastHashJoin") == 7, plan
+    assert "SortMergeJoin" not in plan
+    assert "EvalPython" not in plan
+    assert plan.count("Exchange hashpartitioning(") == 1, plan
+    assert plan.count("Exchange hashpartitioning(conv_id") == 1, plan
