@@ -24,13 +24,16 @@ Route coverage:
          first-sub-frame chain walk is an ``aggregate`` loop bounded by
          ``MK_DEPTH_CAP`` (dsymprocessor/logs_processor.go:292-398)
 
-Expression-duplication discipline: the per-line cascades are interpreted
-(HOFs are CodegenFallback), so every re-reference would re-run them.  All
-expensive work is therefore built exactly once per row inside a single
-``_pp`` struct column (a multi-referenced non-cheap alias survives
-CollapseProject), and the PARSED_SCHEMA struct is assembled from cheap
-attribute lookups in a second projection.  Inside the MetricKit walk,
-``_let`` binds an intermediate value once for several uses.
+Expression-duplication discipline: every value is built once.  Inside a
+lambda nothing removes a repeated subtree, and the per-line cascades are
+interpreted (HOFs are CodegenFallback), so each re-reference would paste
+the subtree into the plan again and re-run it per line.  So all expensive
+work is built once per row inside a single ``_pp`` struct column (a
+multi-referenced non-cheap alias survives CollapseProject) that the
+PARSED_SCHEMA struct reads by cheap attribute lookups; a value used
+several times inside a lambda (the Opera marker, a frame's eval-rewritten
+url/line/col, each MetricKit step) is bound once with ``common.let``; and
+a line's match flag is its groups' non-nullness, not a second regex run.
 
 The regexes are the scalar parsers' patterns in java.util.regex syntax
 with ``(?d)`` (only ``\\n`` ends a line, as in Python ``re``); both engines
@@ -52,6 +55,7 @@ from symspark.functions.limits import (
     MK_DEPTH_CAP,
 )
 from symspark.functions.parse import PARSE_WRAP
+from symspark.operators.common import let
 from symspark.schemas import FRAME_SCHEMA
 
 # --- regexes (java.util.regex; group numbering noted inline) ---------------
@@ -70,9 +74,10 @@ RE_WINJS = (
     r"(?di)^\s*at (?:((?:\[object object\])?.+) )?\(?"
     r"((?:file|ms-appx|https?|webpack|blob):.*?):(\d+)(?::(\d+))?\)?\s*$"
 )
-# 1 func, 2 args, 3 url, 4 line, 5 col
+# 1 func, 2 url, 3 line, 4 col (js_parser's args group is not captured:
+# nothing reads it, so every stack-property strategy yields the same groups)
 RE_GECKO = (
-    r"(?di)^\s*(.*?)(?:\((.*?)\))?(?:^|@)"
+    r"(?di)^\s*(.*?)(?:\(.*?\))?(?:^|@)"
     r"((?:file|https?|blob|chrome|webpack|resource|\[native).*?|[^@]*bundle)"
     r"(?::(\d+))?(?::(\d+))?\s*$"
 )
@@ -143,11 +148,6 @@ def _trim_ws(c: Column) -> Column:
     return F.regexp_replace(c, r"^\s+|\s+$", "")
 
 
-def _let(value: Column, body) -> Column:
-    """``body(v)`` with ``value`` evaluated once however often body uses v."""
-    return F.transform(F.array(value), body)[0]
-
-
 # Group-separator for single-execution extraction: one regexp_replace of an
 # anchored, pre-rlike-gated pattern rewrites the line to its capture groups
 # joined by this sentinel; splitting yields every group with ONE regex run
@@ -210,34 +210,27 @@ def _stack_prop_candidate(l: Column) -> Column:
         )
         .when(l.rlike(RE_CHROME), _tag(1, _groups(l, RE_CHROME, 4)))
         .when(l.rlike(RE_WINJS), _tag(2, _groups(l, RE_WINJS, 4)))
-        .when(l.rlike(RE_GECKO), _tag(3, _groups(l, RE_GECKO, 5)))
+        .when(l.rlike(RE_GECKO), _tag(3, _groups(l, RE_GECKO, 4)))
     )
     return F.when(_line_ok(l), cascade)
 
 
 def _stack_prop_frame(x: Column, i: Column) -> Column:
     s, g = x["s"], x["g"]
-    gecko = s == F.lit(3)
-    # gecko groups: (func, args, url, line, col) -> skip args
-    url0 = F.when(gecko, g[2]).otherwise(g[1])
-    line0 = F.when(gecko, g[3]).otherwise(g[2])
-    col0 = F.when(gecko, F.element_at(g, 5)).otherwise(g[3])
-    # Chrome eval / native and Gecko "> eval" rewrites (rare: their extra
-    # regex runs only on rows whose url carries the token)
+    url0 = g[1]
+    # Chrome eval / native and Gecko "> eval" rewrites of (url, line, col),
+    # bound once (rare: their extra regex runs only on rows whose url
+    # carries the token)
     is_ch = s == F.lit(1)
-    ev = is_ch & url0.startswith("eval") & url0.rlike(RE_CHROME_EVAL)
-    evg = _groups_find(url0, RE_CHROME_EVAL, 3)
-    gev = gecko & url0.contains(" > eval") & url0.rlike(RE_GECKO_EVAL)
-    gevg = _groups_find(url0, RE_GECKO_EVAL, 2)
-    url = (
-        F.when(ev, evg[0])
-        .when(is_ch & url0.startswith("native"), F.lit("(native)"))
-        .when(gev, gevg[0])
-        .otherwise(url0)
+    ulc = (
+        F.when(is_ch & url0.startswith("eval") & url0.rlike(RE_CHROME_EVAL),
+               _groups_find(url0, RE_CHROME_EVAL, 3))
+        .when(is_ch & url0.startswith("native"), F.array(F.lit("(native)"), g[2], g[3]))
+        .when((s == F.lit(3)) & url0.contains(" > eval") & url0.rlike(RE_GECKO_EVAL),
+              F.array_append(_groups_find(url0, RE_GECKO_EVAL, 2), F.lit(None)))
+        .otherwise(F.slice(g, 2, 3))
     )
-    line = F.when(ev, evg[1]).when(gev, gevg[1]).otherwise(line0)
-    col = F.when(ev, evg[2]).when(gev, F.lit(None)).otherwise(col0)
-    return _js_frame(i, url, g[0], line, col)
+    return let(ulc, lambda u: _js_frame(i, u[0], g[0], u[1], u[2]))
 
 
 # --- js: the Opera formats ---------------------------------------------------
@@ -290,11 +283,12 @@ def _strided(lines: Column, start: int) -> Column:
 def _js_pack(text: Column, message: Column) -> Column:
     """``compute_stack_trace``: Opera 11, stack property, Opera 10, Opera 9
     message, first non-empty wins.  Only Opera-marker rows evaluate the
-    whole cascade; the rest can only match the stack property."""
+    Opera entries; the rest can only match the stack property."""
     stack = F.coalesce(text, F.lit(""))
     msg = F.coalesce(message, F.lit(""))
     lines = F.split(stack, "\n")
     msg_lines = F.split(msg, "\n")
+    opera11 = _matched_frames(_strided(lines, 0), _opera11_candidate, _opera11_frame)
     stack_prop = _matched_frames(lines, _stack_prop_candidate, _stack_prop_frame)
     opera10 = F.when(
         F.size(lines) >= 2,
@@ -304,16 +298,13 @@ def _js_pack(text: Column, message: Column) -> Column:
         F.size(msg_lines) >= 4,
         _matched_frames(_strided(msg_lines, 2), _opera9_candidate, _opera9_frame),
     )
-    cascade = F.array(
-        _pack(_matched_frames(_strided(lines, 0), _opera11_candidate, _opera11_frame),
-              mode=F.lit("stacktrace")),
+    cascade = let(stack.rlike(RE_OPERA_MARKER) | msg.rlike(RE_OPERA_MARKER), lambda marked: F.array(
+        _pack(F.when(marked, opera11), mode=F.lit("stacktrace")),
         _pack(stack_prop, mode=F.lit("stack")),
-        _pack(opera10, mode=F.lit("stacktrace")),
-        _pack(opera9, mode=F.lit("multiline")),
-    )
-    first = F.try_element_at(F.filter(cascade, lambda p: F.size(p["frames"]) > 0), F.lit(1))
-    marked = stack.rlike(RE_OPERA_MARKER) | msg.rlike(RE_OPERA_MARKER)
-    return F.when(marked, first).otherwise(_pack(stack_prop, mode=F.lit("stack")))
+        _pack(F.when(marked, opera10), mode=F.lit("stacktrace")),
+        _pack(F.when(marked, opera9), mode=F.lit("multiline")),
+    ))
+    return F.try_element_at(F.filter(cascade, lambda p: F.size(p["frames"]) > 0), F.lit(1))
 
 
 # --- jvm --------------------------------------------------------------------
@@ -323,12 +314,11 @@ def _jvm_frames(lines: Column) -> Column:
         F.slice(lines, 2, F.greatest(F.size(lines) - 1, F.lit(0))),
         lambda l: _trim_ws(l) != "",
     )
-    # step 1: one regex run per line (match flag + all groups), materialized
+    # step 1: one regex run per line (all groups, null if no match), materialized
     parsed = F.transform(
         kept,
         lambda l: F.struct(
             l.alias("raw"),
-            (_line_ok(l) & l.rlike(RE_JAVA_FRAME)).alias("m"),
             F.when(_line_ok(l) & l.rlike(RE_JAVA_FRAME),
                    _groups(l, RE_JAVA_FRAME, 4)).alias("g"),
         ),
@@ -338,7 +328,7 @@ def _jvm_frames(lines: Column) -> Column:
         g = x["g"]
         line = F.when(g[2] == "Native Method", F.lit(-2)).otherwise(_int_or(g[3], -1))
         return F.when(
-            x["m"],
+            g.isNotNull(),
             frame_struct(
                 pos=i, kind=F.lit("jvm"),
                 cls=g[0], method=g[1], src=g[2], line=line,
@@ -369,7 +359,6 @@ def _apple_frames(text: Column) -> Column:
         lines,
         lambda l: F.struct(
             l.alias("raw"),
-            (_line_ok(l) & l.rlike(RE_APPLE)).alias("m"),
             F.when(_line_ok(l) & l.rlike(RE_APPLE),
                    _groups_find(l, RE_APPLE, 6)).alias("g"),
         ),
@@ -378,7 +367,7 @@ def _apple_frames(text: Column) -> Column:
     def build(x: Column, i: Column) -> Column:
         g = x["g"]
         return F.when(
-            x["m"],
+            g.isNotNull(),
             frame_struct(
                 pos=i, kind=F.lit("apple"), raw=x["raw"],
                 prefix=g[0], lib=g[2], tok=g[4],
@@ -442,7 +431,7 @@ def _mk_stack(c: Column, si: Column, steps: Column) -> Column:
         F.try_variant_get(c["callStackFrames"], "$", f"array<{_MK_LEAF_T}>"),
         lambda f: f.isNotNull(),
     )
-    return _let(walk, lambda w: F.struct(
+    return let(walk, lambda w: F.struct(
         F.transform(
             F.concat(w["out"], F.coalesce(flat, F.array().cast(f"array<{_MK_LEAF_T}>"))),
             lambda f: _mk_frame(f, si),
@@ -463,7 +452,7 @@ def _mk_falsy(v: Column) -> Column:
 
 def _mk_pack(src: Column) -> Column:
     """``metrickit.flatten_metrickit`` + ``parse._parse_mk``.  Each step is
-    bound once with ``_let``; a step past a failed one reads NULL."""
+    bound once with ``let``; a step past a failed one reads NULL."""
     # every chain level is a JSON object, so the text's '{' count bounds
     # the walk (keeps short reports from paying MK_DEPTH_CAP steps)
     braces = F.length(src) - F.length(F.replace(src, F.lit("{"), F.lit("")))
@@ -486,11 +475,11 @@ def _mk_pack(src: Column) -> Column:
         )
         return _pack(F.when(error.isNull(), frames), error=error)
 
-    return _let(doc, lambda d: _let(
+    return let(doc, lambda d: let(
         F.try_variant_get(d["v"], "$", "struct<callStacks:variant>"),
-        lambda top: _let(
+        lambda top: let(
             F.try_variant_get(top["callStacks"], "$", f"array<{_MK_STACK_T}>"),
-            lambda stacks: _let(
+            lambda stacks: let(
                 F.transform(stacks, lambda c, si: _mk_stack(c, si, d["n"])),
                 lambda per: pack(d["v"], top, stacks, per),
             ),

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from symspark.config import PipelineConfig
+from symspark.operators.common import let
 
 ERR_PARTIAL = "symbolication failed for some stack frames"  # errPartialSymbolication
 
@@ -74,52 +75,40 @@ def regroup(frames: DataFrame) -> DataFrame:
 
 
 def _patched_frames(efs: Column) -> Column:
-    """Apply the dSYM negative-cache quirks as pure array transforms."""
+    """Apply the dSYM negative-cache quirks as pure array transforms.
 
-    def rebuild(x: Column, **patch: Column) -> Column:
-        return F.struct(
-            *[(patch[f] if f in patch else x[f]).alias(f) for f in _EF_FIELDS]
+    Pass 1: a later frame of an already-missed uuid hits the cached
+    FetchError.  Pass 2: MetricKit aborts at the first erroring frame, so
+    its later frames are never reached (no counters, no fetches, no error
+    text).  The pass-1 flags and the abort position are each bound once
+    per record, and each frame struct is rebuilt once, patching only the
+    fields that change."""
+    hits = F.transform(efs, lambda x, i: x["miss_uuid"].isNotNull() & F.exists(
+        F.slice(efs, F.lit(1), i),
+        lambda y: y["miss_uuid"].isNotNull() & (y["miss_uuid"] == x["miss_uuid"]),
+    ))
+
+    def frame(x: Column, hit: Column, abort: Column) -> Column:
+        mk_hit = hit & (x["kind"] == "mk")
+        past = (x["pos"] > abort) & x["kind"].startswith("mk")  # null: no abort
+        gone = hit | past  # counters and fetch key dropped
+        patched = dict(
+            chunk=F.when(mk_hit, F.lit(None)).otherwise(x["chunk"]),
+            f_failed=F.when(hit, F.lit(True)).otherwise(x["f_failed"]),
+            proc_inc=F.when(gone, F.lit(0)).otherwise(x["proc_inc"]),
+            fail_inc=F.when(gone, F.lit(0)).otherwise(x["fail_inc"]),
+            fetch_key=F.when(gone, F.lit(None)).otherwise(x["fetch_key"]),
+            f_err=F.when(past, F.lit(None)).when(mk_hit, x["miss_err"]).otherwise(x["f_err"]),
         )
+        return F.struct(*[patched.get(f, x[f]).alias(f) for f in _EF_FIELDS])
 
-    # pass 1: later frames of an already-missed uuid hit the cached FetchError
-    def later_miss_patch(x: Column, i: Column) -> Column:
-        seen_before = F.exists(
-            F.slice(efs, F.lit(1), i),
-            lambda y: y["miss_uuid"].isNotNull() & (y["miss_uuid"] == x["miss_uuid"]),
-        )
-        hit = x["miss_uuid"].isNotNull() & seen_before
-        apple = rebuild(
-            x, f_failed=F.lit(True), proc_inc=F.lit(0), fail_inc=F.lit(0),
-            fetch_key=F.lit(None).cast("string"),
-        )
-        mk = rebuild(
-            x, f_err=x["miss_err"], chunk=F.lit(None).cast("string"),
-            f_failed=F.lit(True), proc_inc=F.lit(0), fail_inc=F.lit(0),
-            fetch_key=F.lit(None).cast("string"),
-        )
-        return (
-            F.when(hit & (x["kind"] == "apple"), apple)
-            .when(hit & (x["kind"] == "mk"), mk)
-            .otherwise(x)
-        )
-
-    efs1 = F.transform(efs, later_miss_patch)
-
-    # pass 2: MetricKit aborts at the first erroring frame — later frames are
-    # never reached (no counters, no fetches, no error text)
-    abort = F.try_element_at(F.filter(efs1, lambda x: x["f_err"].isNotNull()), F.lit(1))
-
-    def post_abort_patch(x: Column) -> Column:
-        past = abort.isNotNull() & (x["pos"] > abort["pos"]) & x["kind"].startswith("mk")
-        return F.when(
-            past,
-            rebuild(
-                x, proc_inc=F.lit(0), fail_inc=F.lit(0),
-                fetch_key=F.lit(None).cast("string"), f_err=F.lit(None).cast("string"),
-            ),
-        ).otherwise(x)
-
-    return F.transform(efs1, post_abort_patch)
+    # abort: the pos of the first pass-1 error (null when none errs)
+    return let(hits, lambda h: let(
+        F.array_min(F.transform(efs, lambda x, i: F.when(
+            x["f_err"].isNotNull() | (h[i] & (x["kind"] == "mk")), x["pos"]
+        ))),
+        lambda abort: F.transform(efs, lambda x, i: frame(x, h[i], abort)),
+    ))
 
 
 def _mk_text(efs: Column) -> Column:
@@ -150,7 +139,10 @@ def _isum(efs: Column, field: str) -> Column:
 
 
 def assemble_records(grouped: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Build the final record columns from the regrouped frame arrays."""
+    """Build the final record columns from the regrouped frame arrays.
+    ``_pre_err``, ``_first_err`` and ``_any_failed``, which most output
+    columns read, are built once as columns (multi-referenced, so they
+    survive CollapseProject) and dropped at the end."""
     df = grouped.withColumn("efs", _patched_frames(F.col("efs")))
 
     route = F.col("route")
@@ -162,7 +154,7 @@ def assemble_records(grouped: DataFrame, cfg: PipelineConfig) -> DataFrame:
     text = F.col("text")
     efs = F.col("efs")
 
-    # --- record-level pre-frame errors ---
+    # --- record-level pre-frame errors, first MetricKit error, any failure ---
     missing = "missing attribute: %s"
     pre_err = (
         F.when(is_jvm & F.col("proguard_uuid").isNull(),
@@ -174,11 +166,14 @@ def assemble_records(grouped: DataFrame, cfg: PipelineConfig) -> DataFrame:
               F.lit(missing % "app.bundle.executable"))  # logs_processor.go:174-176
         .when(route == "mk", F.col("p_error"))  # invalid MetricKit JSON
     )
-
-    any_failed = F.exists(efs, lambda x: F.coalesce(x["f_failed"], F.lit(False)))
-    first_err = F.try_element_at(
-        F.filter(efs, lambda x: x["f_err"].isNotNull()), F.lit(1)
-    )["f_err"]
+    df = df.withColumns({
+        "_pre_err": pre_err,
+        "_first_err": F.try_element_at(
+            F.filter(efs, lambda x: x["f_err"].isNotNull()), F.lit(1)
+        )["f_err"],
+        "_any_failed": F.exists(efs, lambda x: F.coalesce(x["f_failed"], F.lit(False))),
+    })
+    pre_err, first_err, any_failed = (F.col(c) for c in ("_pre_err", "_first_err", "_any_failed"))
     mk_abort = (route == "mk") & first_err.isNotNull()
     failed_out = F.when(processed, pre_err.isNotNull() | any_failed | mk_abort)
     error_out = F.when(
@@ -197,12 +192,8 @@ def assemble_records(grouped: DataFrame, cfg: PipelineConfig) -> DataFrame:
         & F.col("exception_message").isNotNull(),
         F.format_string("%s: %s", F.col("exception_type"), F.col("exception_message")),
     )
-    body_empty = body.isNull() | (body == "")
-    js_jvm_text = (
-        F.when(header.isNotNull() & body_empty, header)
-        .when(header.isNotNull(), F.concat(header, F.lit("\n"), body))
-        .otherwise(F.coalesce(body, F.lit("")))
-    )
+    # header and/or body, joined by a newline when both are there
+    js_jvm_text = F.concat_ws("\n", header, F.nullif(body, F.lit("")))
     text_out = (
         F.when(~processed | pre_err.isNotNull() | mk_abort, text)
         .when(is_js | is_jvm, js_jvm_text)
@@ -324,5 +315,5 @@ def assemble_records(grouped: DataFrame, cfg: PipelineConfig) -> DataFrame:
         ),
     }
     return df.withColumns(out_cols).drop(
-        "efs", "p_name", "p_message", "p_error"
+        "efs", "p_name", "p_message", "p_error", "_pre_err", "_first_err", "_any_failed"
     )

@@ -1,4 +1,5 @@
-"""Shared frame-outcome struct for the enrichment operators.
+"""Shared frame-outcome struct for the enrichment operators, and the one
+expression-binding helper of the parse and assembly layers.
 
 Each operator (sourcemap / proguard / dsym) fills the flat ``o_*`` outcome
 columns for its frame kinds; the regroup packs them into one struct per
@@ -8,7 +9,7 @@ Python in the enrich stage.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
 OUTCOME_SCHEMA = T.StructType(
@@ -59,21 +60,31 @@ def init_outcome_cols(df):
     )
 
 
+def let(value: Column, body) -> Column:
+    """``body(v)`` with ``value`` evaluated once however often body uses v."""
+    return F.transform(F.array(value), body)[0]
+
+
 def fill_outcomes(df, branches: list):
     """Apply [(condition, {field: Column})] outcome branches to the flat
-    ``o_*`` columns.  Earlier operators' values win only for their own
-    kinds; conditions across operators are disjoint (frame kind)."""
+    ``o_*`` columns: the FIRST matching branch sets its fields (the others
+    null), a frame no branch matches keeps its values.  Conditions across
+    operators are disjoint (frame kind).  The branch is picked once per
+    frame, as the ``_br`` index column every ``o_*`` column switches on (a
+    multi-referenced non-cheap alias survives CollapseProject), so each
+    condition and each field value is built once."""
+    pick = F.when(branches[0][0], 0)
+    for k, (cond, _) in enumerate(branches[1:], 1):
+        pick = pick.when(cond, k)
+    br = F.col("_br")
     updates = {}
     for name, typ in _OUT_FIELDS:
-        expr = F.col(f"o_{name}")
-        # build when-chain in reverse so the FIRST matching branch wins
-        for cond, fields in reversed(branches):
+        expr = F.when(br.isNull(), F.col(f"o_{name}"))
+        for k, (_, fields) in enumerate(branches):
             if name in fields:
-                expr = F.when(cond, fields[name].cast(typ)).otherwise(expr)
-            else:
-                expr = F.when(cond, F.lit(None).cast(typ)).otherwise(expr)
+                expr = expr.when(br == k, fields[name].cast(typ))
         updates[f"o_{name}"] = expr
-    return df.withColumns(updates)
+    return df.withColumn("_br", pick).withColumns(updates).drop("_br")
 
 
 MAX_UINT32 = 4294967295

@@ -19,66 +19,40 @@ from symspark.functions import parse_sql
 from symspark.schemas import FRAME_SCHEMA
 
 
+# per structured kind: the reference's attribute keys (named in the
+# mismatch error), the four input columns, and the frame field each fills
+_STRUCTURED = {
+    "js": (  # sourcemapprocessor/factory.go:29-33
+        ["exception.structured_stacktrace.columns", "exception.structured_stacktrace.functions",
+         "exception.structured_stacktrace.lines", "exception.structured_stacktrace.urls"],
+        ["st_columns", "st_functions", "st_lines", "st_urls"],
+        ["col", "func", "line", "url"],
+    ),
+    "jvm": (  # proguardprocessor/factory.go:31-34
+        ["exception.structured_stacktrace.classes", "exception.structured_stacktrace.methods",
+         "exception.structured_stacktrace.lines", "exception.structured_stacktrace.source_files"],
+        ["st_classes", "st_methods", "st_jvm_lines", "st_source_files"],
+        ["cls", "method", "line", "src"],
+    ),
+}
+
+
 def _structured_parsed(kind: str) -> Column:
     """Parsed struct for a structured-array route (JVM-only expressions)."""
-    if kind == "js":
-        ref_keys = [  # names used in the mismatch error (factory.go:29-33)
-            "exception.structured_stacktrace.columns",
-            "exception.structured_stacktrace.functions",
-            "exception.structured_stacktrace.lines",
-            "exception.structured_stacktrace.urls",
-        ]
-        cols = ["st_columns", "st_functions", "st_lines", "st_urls"]
-        zipped = F.arrays_zip(
-            F.col("st_columns").alias("c"),
-            F.col("st_functions").alias("f"),
-            F.col("st_lines").alias("l"),
-            F.col("st_urls").alias("u"),
-        )
-        frames = F.transform(
-            zipped,
-            lambda x, i: parse_sql.frame_struct(
-                pos=i, kind=F.lit("js"), url=x["u"], func=x["f"], line=x["l"], col=x["c"]
-            ),
-        )
-        # iteration count = columns length (processor.go:253)
-        sizes_equal = (
-            (F.size(cols[0]) == F.size(cols[1]))
-            & (F.size(cols[0]) == F.size(cols[2]))
-            & (F.size(cols[0]) == F.size(cols[3]))
-        )
-    else:
-        ref_keys = [  # proguardprocessor/factory.go:31-34
-            "exception.structured_stacktrace.classes",
-            "exception.structured_stacktrace.methods",
-            "exception.structured_stacktrace.lines",
-            "exception.structured_stacktrace.source_files",
-        ]
-        cols = ["st_classes", "st_methods", "st_jvm_lines", "st_source_files"]
-        zipped = F.arrays_zip(
-            F.col("st_classes").alias("c"),
-            F.col("st_methods").alias("m"),
-            F.col("st_jvm_lines").alias("l"),
-            F.col("st_source_files").alias("s"),
-        )
-        frames = F.transform(
-            zipped,
-            lambda x, i: parse_sql.frame_struct(
-                pos=i, kind=F.lit("jvm"), cls=x["c"], method=x["m"], line=x["l"], src=x["s"]
-            ),
-        )
-        sizes_equal = (
-            (F.size(cols[0]) == F.size(cols[1]))
-            & (F.size(cols[0]) == F.size(cols[2]))
-            & (F.size(cols[0]) == F.size(cols[3]))
-        )
-
+    ref_keys, cols, fields = _STRUCTURED[kind]
+    zipped = F.arrays_zip(*[F.col(c).alias(f[0]) for c, f in zip(cols, fields)])
+    frames = F.transform(
+        zipped,
+        lambda x, i: parse_sql.frame_struct(
+            pos=i, kind=F.lit(kind), **{f: x[f[0]] for f in fields}
+        ),
+    )
+    # iteration count = first column's length (processor.go:253)
+    sizes = [F.size(c) for c in cols]
+    sizes_equal = (sizes[0] == sizes[1]) & (sizes[0] == sizes[2]) & (sizes[0] == sizes[3])
     mismatch_err = F.format_string(
         "mismatched stacktrace attribute lengths: (%s %d) (%s %d) (%s %d) (%s %d)",
-        F.lit(ref_keys[0]), F.size(cols[0]),
-        F.lit(ref_keys[1]), F.size(cols[1]),
-        F.lit(ref_keys[2]), F.size(cols[2]),
-        F.lit(ref_keys[3]), F.size(cols[3]),
+        *[v for key, n in zip(ref_keys, sizes) for v in (F.lit(key), n)],
     )
     empty_frames = F.array().cast(f"array<{FRAME_SCHEMA.simpleString()}>")
     return F.struct(

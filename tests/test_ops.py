@@ -202,66 +202,6 @@ def test_streaming_foreachbatch(spark, fixture_dir, stream_input, tmp_path):
     assert spark.read.parquet(os.path.join(out, "sinks")).count() == t.count()
 
 
-def test_streaming_windowed_metrics(spark, stream_input, tmp_path):
-    from symspark.streaming.stream import streaming_sink_metrics
-
-    agg = streaming_sink_metrics(spark, stream_input)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("sink_metrics")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "m_ckpt"))
-        .start()
-    )
-    q.awaitTermination(300)
-    # watermark append-mode emits closed windows; with availableNow over a
-    # static file the final watermark closes them
-    rows = spark.sql("select * from sink_metrics").collect()
-    assert {"window_start", "route", "n"} <= set(spark.table("sink_metrics").columns)
-    assert all(r["n"] > 0 for r in rows)
-
-
-def test_streaming_conversation_state(spark, fixture_dir, stream_input, tmp_path):
-    """applyInPandasWithState: the LAST cumulative snapshot per conversation
-    must equal the batch groupBy totals, across multiple micro-batches."""
-    from symspark.streaming.stream import streaming_conversation_state
-
-    updates = streaming_conversation_state(spark, stream_input, max_files_per_trigger=4)
-    q = (
-        updates.writeStream.format("memory")
-        .queryName("conv_state")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "cs_ckpt"))
-        .start()
-    )
-    # default NoTimeout: the availableNow query self-terminates after the
-    # input drains (a quiet_timeout_ms query is continuous - see docstring)
-    assert q.awaitTermination(300)
-    got = spark.sql(
-        """select conv_id, max(turns) as turns, max(routed_turns) as routed_turns
-           from conv_state group by conv_id"""
-    ).collect()
-    from symspark.operators import route as route_op
-    from symspark.config import DEFAULT_CONFIG
-
-    t = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
-    expected = {
-        r["conv_id"]: (r["turns"], r["routed"])
-        for r in route_op.gate_and_route(t, DEFAULT_CONFIG)
-        .groupBy("conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("turns"),
-            F.sum((F.col("route") != "skip").cast("long")).alias("routed"),
-        )
-        .collect()
-    }
-    assert len(got) == len(expected)
-    for r in got:
-        assert (r["turns"], r["routed_turns"]) == expected[r["conv_id"]], r["conv_id"]
-
-
 def test_multimodal_features(spark):
     from symspark import multimodal
 
@@ -455,3 +395,32 @@ def test_prepared_dims_plan_shape(spark, fixture_dir):
     assert "EvalPython" not in plan
     assert plan.count("Exchange hashpartitioning(") == 1, plan
     assert plan.count("Exchange hashpartitioning(conv_id") == 1, plan
+
+
+def test_plan_builds_each_expression_once(spark, fixture_dir):
+    """The full optimized plan of run_pipeline over prepared dims holds each
+    parse regex only as often as the engine runs it (a match flag and one
+    group extraction; the Opera 9 formats parse two line sets, the JVM
+    header is extracted twice), and each enricher's error text at most
+    twice (its branch pick and its chunk).  A subtree pasted into several
+    columns, or twice into one lambda, shows up here as extra copies."""
+    from symspark import pipeline as pl
+    from symspark.functions import parse_sql
+
+    t = spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))
+    lookups = load_lookups(spark, fixture_dir)
+    out = run_pipeline(t, lookups, dims=pl.prepare_dims(lookups))
+    key = "spark.sql.debug.maxToStringFields"  # print every field: elide nothing
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1000000")
+    try:
+        plan = _optimized(out)
+    finally:
+        spark.conf.set(key, prev)
+    needs = {"RE_OPERA9_LINKED": 4, "RE_OPERA9_INLINE": 4, "RE_JAVA_HEADER": 3}
+    counts = {
+        n: plan.count(getattr(parse_sql, n)) for n in dir(parse_sql) if n.startswith("RE_")
+    }
+    assert {n: c for n, c in counts.items() if c > needs.get(n, 2)} == {}, counts
+    for text in ("could not map frame", "Invalid line number", "could not find symbol"):
+        assert plan.count(text) <= 2, (text, plan.count(text))

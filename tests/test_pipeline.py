@@ -111,6 +111,13 @@ ROWS = [
               f'{{"binaryName":"libswiftCore.dylib","binaryUUID":"{MISS1}","offsetAddress":7}},'
               f'{{"binaryName":"libswiftCore.dylib","binaryUUID":"{MISS1}","offsetAddress":9}}'
               "]}]}")),
+    # frames past the aborting one (the second MISS1 frame)
+    row("mk8", language="swift", event_name="metrickit.diagnostic.crash",
+        text=('{"callStacks":[{"callStackFrames":['
+              f'{{"binaryName":"libswiftCore.dylib","binaryUUID":"{MISS1}","offsetAddress":7}},'
+              f'{{"binaryName":"libswiftCore.dylib","binaryUUID":"{MISS1}","offsetAddress":9}},'
+              f'{{"binaryName":"libfoo.dylib","binaryUUID":"{MISS2}","offsetAddress":5}}'
+              "]}]}")),
     row("mk4", language="swift", event_name="metrickit.diagnostic.crash",
         text='{"callStacks": [}'),
     row("mk5", language="swift", event_name="metrickit.diagnostic.crash",
@@ -408,6 +415,20 @@ def test_mk_cached_fetch_abort(results):
     assert r["metrickit_stacktrace_json"] is None
     assert r["exception_type"] is None  # attrs only set on success
     assert (r["frames_processed"], r["frames_failed"], r["fetch_failures"]) == (1, 0, 1)
+
+
+def test_mk_frames_past_abort(results):
+    # the abort ends the record's walk (logs_processor.go:362-393): the
+    # MISS2 frame after it adds no counter, no fetch key and no error text
+    r = results["mk8"]
+    assert r["text"] == input_text("mk8")
+    assert r["exception_symbolicator_failed"] is True
+    assert r["exception_symbolicator_error"] == (
+        f"failed to fetch dSYM for {MISS1}: failed to find dSYM file: "
+        f"/dsyms/{MISS1}.dSYM/Contents/Resources/DWARF/libswiftCore.dylib"
+    )
+    assert (r["frames_processed"], r["frames_failed"], r["fetch_failures"]) == (1, 0, 1)
+    assert r["sink"] == "mk/failed"
 
 
 def test_mk_invalid_json(results):
